@@ -41,10 +41,25 @@ from pyspark.sql import functions as F
 from .build import dictionary_df, doc_tokens_df, explode_doc_tokens
 from .packaging import ensure_importable
 from .postings import BLOCK_DOCS, BLOCKS_SCHEMA, blocks_batches_for_partition
-from .query import idf_col
+from .query import idf_col, idf_py, round_half_up
 from .tokenizer import tokenize
 
 MANIFEST = "manifest.json"
+
+# IndexReader._qtf_topk serves a query in the driver process (pyarrow
+# pruned read + engine.wand.topk_shard per shard, no Spark job) when
+# the query terms' Σ n_blocks (dictionary) is at or below this bound,
+# and through the per-shard applyInPandas job above it. Measured with
+# bm25_topk(q, 10, with_metadata=True), gen_corpus(48 000 docs), 16
+# shards, local[4] on a 4-cpu host, median of 3:
+#   Σ n_blocks      80    745   1 458   4 093   7 390   10 863   12 308
+#   local  ms       92    222     364     920   1 789    2 206    2 856
+#   Spark  ms    1 406  1 877   1 635   1 882   2 392    2 774    2 683
+# The crossover is at ~12 k blocks. The bound sits ~3x below it: the
+# local kernel is serial over shards, while the Spark path runs shards
+# in parallel, so on hosts with more cores the crossover moves down.
+# The bound also caps the driver-side read at a few MB of blocks.
+LOCAL_SERVE_MAX_BLOCKS = 4096
 
 
 def _write_manifest(out_dir: str, m: dict) -> None:
@@ -685,6 +700,11 @@ class IndexReader:
         self._meta_ranges: dict[str, tuple[float, float]] = {}
         self.mod_ta_served = 0
         self.mod_ta_fallback = 0
+        # _qtf_topk dispatch (LOCAL_SERVE_MAX_BLOCKS): queries served in
+        # the driver process vs through the applyInPandas job
+        self._arrow_dss: dict = {}
+        self.local_served = 0
+        self.spark_served = 0
         ensure_importable(self.spark)
 
     # ---- tombstones (engine/compact.py; Lucene liveDocs semantics) ----
@@ -702,15 +722,51 @@ class IndexReader:
         import numpy as np
 
         if self._tomb_np is None:
-            t = self.tombstones_df()
-            self._tomb_np = (
-                np.empty(0, dtype=np.int64)
-                if t is None
-                else np.sort(
-                    np.array([r["doc_id"] for r in t.collect()], dtype=np.int64)
+            if self.manifest["stages"].get("tombstones") != "done":
+                self._tomb_np = np.empty(0, dtype=np.int64)
+            else:
+                # pyarrow, not a Spark collect: the driver-served query
+                # path (_local_topk) launches no Spark job at all
+                ids = self._arrow("tombstones").to_table(columns=["doc_id"])
+                self._tomb_np = np.sort(
+                    ids.column("doc_id").to_numpy().astype(np.int64)
                 )
-            )
         return self._tomb_np
+
+    def _arrow(self, name: str):
+        """Memoized pyarrow dataset over an index-dir parquet artifact
+        (hive ``shard=`` partitions discovered) — the driver-side twin
+        of _artifact for reads that must not launch a Spark job."""
+        import pyarrow.dataset as ds
+
+        hit = self._arrow_dss.get(name)
+        if hit is None:
+            hit = ds.dataset(
+                os.path.join(self.dir, name), format="parquet",
+                partitioning="hive",
+            )
+            self._arrow_dss[name] = hit
+        return hit
+
+    def _term_stats(self, terms) -> dict[str, tuple[int, int]]:
+        """term → (df, n_blocks) for the in-vocabulary ``terms``: one
+        pyarrow read of ``dictionary/`` with the isin pushed into the
+        parquet scan (row-group min/max pruning on the sorted terms)."""
+        import pyarrow.compute as pc
+
+        if not terms:
+            return {}
+        t = self._arrow("dictionary").to_table(
+            columns=["term", "df", "n_blocks"],
+            filter=pc.field("term").isin(sorted(terms)),
+        )
+        return {
+            term: (int(df), int(nb))
+            for term, df, nb in zip(
+                t.column("term").to_pylist(), t.column("df").to_pylist(),
+                t.column("n_blocks").to_pylist(),
+            )
+        }
 
     def _live(self, df: DataFrame) -> DataFrame:
         """Anti-join a result frame against the tombstones (no-op when
@@ -1248,20 +1304,18 @@ class IndexReader:
 
     def query_weights(self, query: str) -> dict[str, float]:
         """term → qtf * idf for the query's terms (tiny driver-side
-        dict; the dictionary lookup is a pushed-down isin scan)."""
+        dict; the dictionary lookup is the pyarrow isin read the
+        driver-served query path uses — no Spark job)."""
         from collections import Counter
 
         qtf = Counter(tokenize(query, use_stem=self.use_stem))
         if not qtf:
             return {}
-        n = self.manifest["stats"]["n_docs"]
-        rows = (
-            self.dictionary()
-            .where(F.col("term").isin(list(qtf)))
-            .select("term", idf_col(F.col("df").cast("double"), F.lit(float(n))).alias("idf"))
-            .collect()
-        )
-        return {r["term"]: qtf[r["term"]] * r["idf"] for r in rows}
+        n = float(self.manifest["stats"]["n_docs"])
+        return {
+            t: qtf[t] * idf_py(float(df), n)
+            for t, (df, _) in self._term_stats(qtf).items()
+        }
 
     def bm25_topk_batch(
         self, queries: dict[str, str], k: int = 10, *, prune: bool = True,
@@ -1269,9 +1323,12 @@ class IndexReader:
     ) -> DataFrame:
         """All queries in ONE job → (query_id, rank, doc_id, score).
 
-        Single-query latency is dominated by fixed Spark job-launch cost
-        (~1 s); batch evaluation (SURVEY.md §3.3) amortizes it — one
-        pruned postings scan over the UNION of all query terms, one
+        A small single query needs no Spark job (bm25_topk serves it
+        in the driver process); through Spark, one query pays a job's
+        fixed launch and scheduling cost (~1.3 s at 5 k docs on 4
+        cpus). Batch evaluation (SURVEY.md §3.3) amortizes that cost
+        over the batch — one pruned postings scan over the UNION of
+        all query terms, one
         mapInPandas pass scoring every query per shard, one
         partitioned-window rank. Throughput scales with queries/job,
         which is the number that matters for a batch engine."""
@@ -1369,16 +1426,19 @@ class IndexReader:
         with_metadata: bool = False, round_scores: int | None = None,
     ) -> DataFrame:
         """Top-k (rank, doc_id, score) via per-shard block-max pruned
-        scoring in applyInPandas + global TakeOrderedAndProject.
+        scoring + a global (score DESC, doc_id ASC) cut.
 
         ``round_scores`` rounds each doc's (complete, shard-local) score
         and uses the rounded value as the sort key — the cross-engine
         float discipline of the DuckDB-checked driver entries.
 
-        The idf lookup rides INSIDE the scoring job as a broadcast join
-        of the isin-pruned dictionary onto the blocks — no separate
-        query_weights() collect round-trip per interactive query
-        (VERDICT r2 #8); the batch path amortizes the same way."""
+        Served by _qtf_topk: a pyarrow read of the query terms'
+        dictionary rows (df → idf, n_blocks) picks the path. Small
+        posting masses (Σ n_blocks ≤ LOCAL_SERVE_MAX_BLOCKS) run the
+        kernel in the driver process and launch no Spark job; larger
+        ones run it per shard in applyInPandas, where the idf lookup
+        rides inside the scoring job as a broadcast join of the
+        isin-pruned dictionary onto the blocks."""
         from collections import Counter
 
         qtf = Counter(tokenize(query, use_stem=self.use_stem))
@@ -2298,11 +2358,27 @@ class IndexReader:
         is the searchAfter cursor (engine/wand.py): the kernel keeps a
         size-k heap of docs sorting strictly after it, and the exact
         rounded-key cursor filter is re-applied here on the global
-        merge (the kernel's eviction is conservative at boundaries)."""
-        spark = self.spark
-        if not qtf_map:
-            return spark.createDataFrame([], "rank int, doc_id long, score double")
+        merge (the kernel's eviction is conservative at boundaries).
+
+        Dispatch: one pyarrow dictionary read gives the terms' df and
+        n_blocks; at Σ n_blocks ≤ LOCAL_SERVE_MAX_BLOCKS the query is
+        served in the driver process (_local_topk — same kernel, same
+        arguments, same merge rules, no Spark job), above it through
+        the per-shard applyInPandas job below, the large-mass and
+        reference path."""
         eps = 0.5 * 10.0 ** (-round_scores) if round_scores is not None else 0.0
+        stats = self._term_stats(qtf_map)
+        # a query with no in-vocabulary term has nothing to score: it is
+        # answered without a job at any bound
+        if not stats or sum(nb for _, nb in stats.values()) <= LOCAL_SERVE_MAX_BLOCKS:
+            self.local_served += 1
+            return self._local_topk(
+                qtf_map, stats, k, prune=prune, eps=eps,
+                round_scores=round_scores, exclude_ids=exclude_ids,
+                after=after, with_metadata=with_metadata,
+            )
+        self.spark_served += 1
+        spark = self.spark
         per_shard = self._qtf_shard_scores(
             qtf_map, k, prune=prune, eps=eps, exclude_ids=exclude_ids,
             after=after,
@@ -2342,16 +2418,94 @@ class IndexReader:
             out = small.join(F.broadcast(meta), "doc_id", "left").orderBy("rank")
         return out
 
+    def _local_topk(
+        self, qtf_map: dict[str, float], stats: dict[str, tuple[int, int]],
+        k: int, *, prune: bool, eps: float, round_scores: int | None,
+        exclude_ids: list[int] | None, after: tuple[float, int] | None,
+        with_metadata: bool,
+    ) -> DataFrame:
+        """_qtf_topk served in the driver process: the query terms'
+        posting blocks through one pyarrow read (hive ``shard=``
+        partitions, term isin pushed into the scan), the unchanged
+        engine.wand.topk_shard per shard with the arguments the Spark
+        shard_kernel passes, then the Spark path's global rules —
+        HALF_UP rounding of each shard's finals, the exact rounded-key
+        cursor filter, and the (score DESC, doc_id ASC) k-cut. The
+        result is built from an Arrow table, which plans as a
+        LocalRelation: the caller's collect() launches no job either.
+        Same columns, order and types as the Spark path."""
+        import numpy as np
+        import pyarrow as pa
+        import pyarrow.compute as pc
+
+        from .postings import BLOCK_COLUMNS
+        from .wand import topk_shard
+
+        n = float(self.manifest["stats"]["n_docs"])
+        avgdl = self.manifest["stats"]["avgdl"]
+        weights = {t: qtf_map[t] * idf_py(float(df), n) for t, (df, _) in stats.items()}
+        drop = self._tomb_array()
+        if exclude_ids:
+            drop = np.union1d(drop, np.asarray(exclude_ids, dtype=np.int64))
+        drop = drop if drop.size else None
+        ids, sc = [np.empty(0, np.int64)], [np.empty(0, np.float64)]
+        if weights:
+            blocks = (
+                self._arrow("postings")
+                .to_table(
+                    columns=BLOCK_COLUMNS,
+                    filter=pc.field("term").isin(sorted(weights)),
+                )
+                .to_pandas()
+                .sort_values(["shard", "term", "block_id"], ignore_index=True)
+            )
+            for _, g in blocks.groupby("shard", sort=True):
+                i, v = topk_shard(
+                    g, weights, avgdl, k, prune=prune, eps=eps,
+                    drop_ids=drop, after=after,
+                )
+                ids.append(i)
+                sc.append(v)
+        ids, sc = np.concatenate(ids), np.concatenate(sc)
+        if round_scores is not None:
+            sc = np.array([round_half_up(v, round_scores) for v in sc.tolist()],
+                          dtype=np.float64)
+        if after is not None:
+            s_a, d_a = after
+            keep = (sc < s_a) | ((sc == s_a) & (ids > d_a))
+            ids, sc = ids[keep], sc[keep]
+        order = np.lexsort((ids, -sc))[:k]
+        out = pa.table({
+            "rank": pa.array(np.arange(1, order.size + 1), pa.int32()),
+            "doc_id": pa.array(ids[order], pa.int64()),
+            "score": pa.array(sc[order], pa.float64()),
+        })
+        schema = "rank int, doc_id long, score double"
+        if with_metadata:
+            # the Spark path's k-row left join, as a pyarrow doc_id isin
+            # read of doc_stats; its column order is the join's
+            meta = self._arrow("doc_stats").to_table(
+                columns=["doc_id", "repo", "path"],
+                filter=pc.field("doc_id").isin(out.column("doc_id")),
+            )
+            out = (
+                out.join(meta, "doc_id", join_type="left outer")
+                .sort_by("rank")
+                .select(["doc_id", "rank", "score", "repo", "path"])
+            )
+            schema = "doc_id long, rank int, score double, repo string, path string"
+        return self.spark.createDataFrame(out, schema)
+
     def bm25_scores_all(self, query: str) -> DataFrame:
         """(doc_id, score) for EVERY doc matching ≥1 query term — the
         exhaustive union scoring over the index (no top-k cut, no
         pruning). Feeds fusion's max-normalization, which needs the full
         score distribution, not just the top-k.
 
-        Like bm25_topk, the idf lookup rides inside the scoring job as
-        a broadcast join of the isin-pruned dictionary onto the blocks
-        (VERDICT r2 #8) — no query_weights() collect round-trip, so a
-        fusion query launches no extra driver job per signal."""
+        Like bm25_topk's Spark path, the idf lookup rides inside the
+        scoring job as a broadcast join of the isin-pruned dictionary
+        onto the blocks (VERDICT r2 #8), so a fusion query launches no
+        extra driver job per signal."""
         import pandas as pd
 
         from collections import Counter

@@ -16,7 +16,10 @@ are the same formulas verbatim.
 
 from __future__ import annotations
 
+import math
+import struct
 from collections import Counter
+from decimal import ROUND_HALF_UP, Decimal
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -37,6 +40,87 @@ def query_terms_df(spark: SparkSession, query: str, *, use_stem: bool = True) ->
 def idf_col(df_col, n_col):
     """ln(1 + (N - df + 0.5)/(df + 0.5)) — pinned variant (SURVEY §5.3a)."""
     return F.log(F.lit(1.0) + (n_col - df_col + 0.5) / (df_col + 0.5))
+
+
+def idf_py(df: float, n: float) -> float:
+    """Scalar twin of :func:`idf_col`, bit-identical to the Spark column
+    (tests/test_local_serving.py checks a grid of df values): the same
+    IEEE double ops, then :func:`strict_log` where Spark calls
+    ``StrictMath.log``. Driver-side serving (IndexReader._local_topk,
+    query_weights) computes idf with this, so its scores equal the
+    Spark path's to the last bit."""
+    return strict_log(1.0 + (n - df + 0.5) / (df + 0.5))
+
+
+def _f64(bits: int) -> float:
+    return struct.unpack("<d", struct.pack("<Q", bits))[0]
+
+
+_LN2_HI, _LN2_LO = _f64(0x3FE62E42FEE00000), _f64(0x3DEA39EF35793C76)
+_LG = [_f64(b) for b in (
+    0x3FE5555555555593, 0x3FD999999997FA04, 0x3FD2492494229359,
+    0x3FCC71C51D8E78AF, 0x3FC7466496CB03DE, 0x3FC39A09D078C69F,
+    0x3FC2F112DF3E5244,
+)]
+
+
+def strict_log(x: float) -> float:
+    """Natural log, op for op fdlibm's ``__ieee754_log`` — the algorithm
+    behind Java's ``StrictMath.log`` and so Spark's ``log``. Python's
+    ``math.log`` (the platform libm) differs from it by one ulp on ~5%
+    of idf arguments, which would break score identity with the Spark
+    path."""
+    bits = struct.unpack("<Q", struct.pack("<d", x))[0]
+    hx, lx = bits >> 32, bits & 0xFFFFFFFF
+    k = 0
+    if hx < 0x00100000 or hx >> 31:  # subnormal, zero or negative
+        if (hx & 0x7FFFFFFF) | lx == 0:
+            return -math.inf
+        if hx >> 31:
+            return math.nan
+        k, x = -54, x * 1.8014398509481984e16  # 2**54: scale subnormal up
+        bits = struct.unpack("<Q", struct.pack("<d", x))[0]
+        hx, lx = bits >> 32, bits & 0xFFFFFFFF
+    if hx >= 0x7FF00000:
+        return x + x
+    k += (hx >> 20) - 1023
+    hx &= 0x000FFFFF
+    i = (hx + 0x95F64) & 0x100000
+    x = _f64(((hx | (i ^ 0x3FF00000)) << 32) | lx)  # normalize x or x/2
+    k += i >> 20
+    f = x - 1.0
+    dk = float(k)
+    if (0x000FFFFF & (2 + hx)) < 3:  # |f| < 2**-20
+        if f == 0.0:
+            return 0.0 if k == 0 else dk * _LN2_HI + dk * _LN2_LO
+        r = f * f * (0.5 - 0.33333333333333333 * f)
+        return f - r if k == 0 else dk * _LN2_HI - ((r - dk * _LN2_LO) - f)
+    s = f / (2.0 + f)
+    z = s * s
+    i = hx - 0x6147A
+    w = z * z
+    j = 0x6B851 - hx
+    t1 = w * (_LG[1] + w * (_LG[3] + w * _LG[5]))
+    t2 = z * (_LG[0] + w * (_LG[2] + w * (_LG[4] + w * _LG[6])))
+    r = t2 + t1
+    if (i | j) > 0:
+        hfsq = 0.5 * f * f
+        if k == 0:
+            return f - (hfsq - s * (hfsq + r))
+        return dk * _LN2_HI - ((hfsq - (s * (hfsq + r) + dk * _LN2_LO)) - f)
+    if k == 0:
+        return f - s * (f - r)
+    return dk * _LN2_HI - ((s * (f - r) - dk * _LN2_LO) - f)
+
+
+def round_half_up(x: float, ndigits: int) -> float:
+    """Scalar twin of Spark's ``F.round(col, ndigits)`` on a double:
+    HALF_UP on the double's shortest decimal form (Spark rounds
+    ``BigDecimal.valueOf(x)``), not numpy's round-half-even of x·10ⁿ."""
+    if not math.isfinite(x):
+        return x
+    q = Decimal(repr(x)).quantize(Decimal(1).scaleb(-ndigits), rounding=ROUND_HALF_UP)
+    return float(q)
 
 
 def bm25_score_col(tf_col, doc_len_col, idf, avgdl_col, qtf_col):

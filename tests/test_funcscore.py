@@ -258,12 +258,19 @@ def test_msm_and_boosting_indexed_equal_recompute(
     ) == _vals(boosting_topk(spark, body, Q, "", K, round_scores=R))
 
 
-def test_indexed_twin_plans_prune_postings(spark, tiny_corpus, tmp_path_factory):
+def test_indexed_twin_plans_prune_postings(
+    spark, tiny_corpus, tmp_path_factory, monkeypatch
+):
     """The posting-served twins must push the queried-term isin into
     the postings parquet scan (PushedFilters In(term, ...)) — at 100 TB
-    the decode cost must be the queried posting mass, not the index."""
+    the decode cost must be the queried posting mass, not the index.
+    mlt_text and regexp_topk are pinned to the Spark serving path
+    (bound 0); the driver-served read is pinned by
+    tests/test_plans.py::test_local_path_reads_only_query_blocks."""
+    import engine.index
     from engine.index import build_index
 
+    monkeypatch.setattr(engine.index, "LOCAL_SERVE_MAX_BLOCKS", 0)
     d = str(tmp_path_factory.mktemp("idx_fs_plans"))
     reader = build_index(
         spark, tiny_corpus, d, use_stem=False, n_shards=4, n_chunks=1,

@@ -75,12 +75,9 @@ def test_query_term_join_is_broadcast(spark, tiny_corpus):
     assert "SortMergeJoin" not in p, p
 
 
-def test_wand_path_scans_prune_terms(spark, index_dir):
-    from engine.index import IndexReader
-
-    r = IndexReader(spark, index_dir)
-    # query two terms guaranteed present in THIS index's dictionary so
-    # the isin filter stays a multi-value In (one term would fold to
+def _two_index_terms(r) -> list[str]:
+    # two terms guaranteed present in THIS index's dictionary so the
+    # isin filter stays a multi-value In (one term would fold to
     # EqualTo and prove nothing about multi-term pruning)
     from engine.tokenizer import tokenize
 
@@ -92,10 +89,49 @@ def test_wand_path_scans_prune_terms(spark, index_dir):
     # query tokenizer maps them back onto themselves
     terms = [t for t in candidates if tokenize(t, use_stem=True) == [t]][:2]
     assert len(terms) == 2
+    return terms
+
+
+def test_wand_path_scans_prune_terms(spark, index_dir, monkeypatch):
+    import engine.index
+    from engine.index import IndexReader
+
+    # bound 0: the applyInPandas (Spark) serving path, whose plan this pins
+    monkeypatch.setattr(engine.index, "LOCAL_SERVE_MAX_BLOCKS", 0)
+    r = IndexReader(spark, index_dir)
+    terms = _two_index_terms(r)
     df = r.bm25_topk(" ".join(terms), 10)
     p = plan_of(df)
     assert "In(term" in p, p  # pushdown reached the postings scan
     assert "TakeOrderedAndProject" in p, p
+    assert r.spark_served == 1 and r.local_served == 0
+
+
+def test_local_path_reads_only_query_blocks(spark, index_dir, monkeypatch):
+    """Driver-served twin of the plan test above: the pyarrow read hands
+    the kernel exactly the queried terms' blocks — Σ n_blocks from the
+    dictionary, no other posting row."""
+    import engine.index
+    import engine.wand
+    from engine.index import IndexReader
+
+    monkeypatch.setattr(engine.index, "LOCAL_SERVE_MAX_BLOCKS", 1 << 40)
+    r = IndexReader(spark, index_dir)
+    terms = _two_index_terms(r)
+    seen = []
+    kernel = engine.wand.topk_shard
+
+    def counting(blocks, *a, **kw):
+        seen.append(blocks[["term", "shard", "block_id"]])
+        return kernel(blocks, *a, **kw)
+
+    monkeypatch.setattr(engine.wand, "topk_shard", counting)
+    assert r.bm25_topk(" ".join(terms), 10).count() == 10
+    assert r.local_served == 1 and r.spark_served == 0
+    want = r.dictionary().where(F.col("term").isin(terms)).agg(F.sum("n_blocks")).first()[0]
+    read = sum(len(b) for b in seen)
+    assert read == want > 0
+    assert set().union(*(set(b["term"]) for b in seen)) == set(terms)
 
 def test_stage2_block_build_is_shuffle_free(spark, index_dir):
     """The chunk-stage plan (file-per-partition read of the sharded

@@ -116,11 +116,16 @@ def test_hit_counts_kernel_path_with_tombstones(
     assert after["q0"] == 0
 
 
-def test_with_metadata_isin_pushdown_no_smj(r4idx):
+def test_with_metadata_isin_pushdown_no_smj(r4idx, monkeypatch):
     """VERDICT r3 item #2 done-condition: the with_metadata plan pushes
     In(doc_id, ...) into the doc_stats parquet scan and contains no
     SortMergeJoin — per-query cost is k row-group reads, never a
-    corpus-wide exchange."""
+    corpus-wide exchange. Pinned to the Spark serving path (bound 0);
+    the driver-served path reads doc_stats with a pyarrow doc_id isin
+    (tests/test_local_serving.py)."""
+    import engine.index
+
+    monkeypatch.setattr(engine.index, "LOCAL_SERVE_MAX_BLOCKS", 0)
     df = r4idx.bm25_topk("index search engine", 5, with_metadata=True)
     assert df.count() > 0
     p = plan_of(df)

@@ -222,10 +222,14 @@ def _plan_of(df) -> str:
     return buf.getvalue()
 
 
-def test_search_after_plan_is_pruned_kernel_shape(reader):
+def test_search_after_plan_is_pruned_kernel_shape(reader, monkeypatch):
     """Cursor paging must keep bm25_topk's plan: postings scan pruned to
     the query terms (PushedFilters In(term)), no sort-merge join —
-    the cursor adds only a Filter over the kernel output."""
+    the cursor adds only a Filter over the kernel output. Pinned to the
+    Spark serving path (bound 0)."""
+    import engine.index
+
+    monkeypatch.setattr(engine.index, "LOCAL_SERVE_MAX_BLOCKS", 0)
     df = reader.search_after("index merge partition", 1.0, 0, K,
                              round_scores=R)
     p = _plan_of(df)

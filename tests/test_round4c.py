@@ -403,15 +403,18 @@ def _plan_of(df) -> str:
     return buf.getvalue()
 
 
-def test_round4c_indexed_plans_prune_terms(spark, idx4c_dir):
+def test_round4c_indexed_plans_prune_terms(spark, idx4c_dir, monkeypatch):
     """The new indexed surfaces must push their term cuts into the
     parquet scans: fuzzy_match (postings isin of the capped expansion),
     match_phrase_prefix and span_near (positions isin of lead ∪
     expansion / query terms), and the phrase-prefix expansion read
-    itself (StartsWith on the positions term column)."""
+    itself (StartsWith on the positions term column). fuzzy_match is
+    pinned to the Spark serving path (bound 0)."""
+    import engine.index
     from engine.index import IndexReader
     from pyspark.sql import functions as F
 
+    monkeypatch.setattr(engine.index, "LOCAL_SERVE_MAX_BLOCKS", 0)
     r = IndexReader(spark, idx4c_dir)
     p = _plan_of(r.fuzzy_match_topk("indx merg", 10))
     assert "PushedFilters" in p and "In(term" in p, p
