@@ -59,7 +59,42 @@ MANIFEST = "manifest.json"
 # local kernel is serial over shards, while the Spark path runs shards
 # in parallel, so on hosts with more cores the crossover moves down.
 # The bound also caps the driver-side read at a few MB of blocks.
+# bm25_topk_batch applies it to Σ n_blocks of the UNION of its queries'
+# terms: the batch decodes each block once for all its queries, so its
+# driver-side cost follows the union, not the number of queries.
 LOCAL_SERVE_MAX_BLOCKS = 4096
+
+
+def _final_cut(hits, k: int, round_scores: int | None,
+               after: tuple[float, int] | None = None):
+    """A driver-served query's per-shard (doc_ids, scores) → its top-k
+    by the Spark path's global rules: HALF_UP rounding of each shard's
+    finals, the exact rounded-key cursor filter, and the (score DESC,
+    doc_id ASC) cut."""
+    import numpy as np
+
+    ids = np.concatenate([np.empty(0, np.int64)] + [h[0] for h in hits])
+    sc = np.concatenate([np.empty(0, np.float64)] + [h[1] for h in hits])
+    if round_scores is not None:
+        sc = np.array([round_half_up(v, round_scores) for v in sc.tolist()],
+                      dtype=np.float64)
+    if after is not None:
+        s_a, d_a = after
+        keep = (sc < s_a) | ((sc == s_a) & (ids > d_a))
+        ids, sc = ids[keep], sc[keep]
+    order = np.lexsort((ids, -sc))[:k]
+    return ids[order], sc[order]
+
+
+def _batch_columns(hits) -> dict:
+    """{query_id: (doc_ids, scores)} → query_id / doc_id / score columns."""
+    import numpy as np
+
+    return {
+        "query_id": [q for q, (ids, _) in hits.items() for _ in range(ids.size)],
+        "doc_id": np.concatenate([np.empty(0, np.int64)] + [i for i, _ in hits.values()]),
+        "score": np.concatenate([np.empty(0, np.float64)] + [v for _, v in hits.values()]),
+    }
 
 
 def _write_manifest(out_dir: str, m: dict) -> None:
@@ -1321,88 +1356,76 @@ class IndexReader:
         self, queries: dict[str, str], k: int = 10, *, prune: bool = True,
         round_scores: int | None = None,
     ) -> DataFrame:
-        """All queries in ONE job → (query_id, rank, doc_id, score).
+        """Top-k of every query of a batch → (query_id, rank, doc_id,
+        score); queries with no in-vocabulary term are omitted.
 
-        A small single query needs no Spark job (bm25_topk serves it
-        in the driver process); through Spark, one query pays a job's
-        fixed launch and scheduling cost (~1.3 s at 5 k docs on 4
-        cpus). Batch evaluation (SURVEY.md §3.3) amortizes that cost
-        over the batch — one pruned postings scan over the UNION of
-        all query terms, one
-        mapInPandas pass scoring every query per shard, one
-        partitioned-window rank. Throughput scales with queries/job,
-        which is the number that matters for a batch engine."""
+        One pyarrow dictionary read gives df (→ idf_py) and n_blocks for
+        the union of the batch's terms. Each shard's blocks of that
+        union become TermBlocks once (engine/wand.py: every block
+        decoded at most once, shared by all queries of the batch) and
+        wand.topk_queries scores every query against them (SURVEY.md
+        §3.3 batch evaluation). At Σ n_blocks ≤ LOCAL_SERVE_MAX_BLOCKS
+        the batch is served in the driver process with no Spark job;
+        above it the same per-shard kernel runs in one applyInPandas
+        over the isin-pruned postings, followed by a per-query window
+        rank. Both paths apply the same rules: HALF_UP rounding of each
+        shard's finals, then the (score DESC, doc_id ASC) k-cut."""
         import pandas as pd
-
-        from pyspark.sql import Window
 
         from collections import Counter
 
-        # ONE dictionary scan for the union of all query terms (a
-        # per-query query_weights() call would launch one driver job
-        # per query and dominate the batch wall-clock)
+        from .wand import topk_queries
+
         qtfs = {
             qid: Counter(tokenize(q, use_stem=self.use_stem))
             for qid, q in queries.items()
         }
-        union_terms = sorted({t for c in qtfs.values() for t in c})
-        n = self.manifest["stats"]["n_docs"]
-        idf = {}
-        if union_terms:
-            for r in (
-                self.dictionary()
-                .where(F.col("term").isin(union_terms))
-                .select(
-                    "term",
-                    idf_col(F.col("df").cast("double"), F.lit(float(n))).alias("idf"),
-                )
-                .collect()
-            ):
-                idf[r["term"]] = r["idf"]
+        stats = self._term_stats({t for c in qtfs.values() for t in c})
+        n = float(self.manifest["stats"]["n_docs"])
+        idf = {t: idf_py(float(df), n) for t, (df, _) in stats.items()}
         weights = {
             qid: {t: c * idf[t] for t, c in qtf.items() if t in idf}
             for qid, qtf in qtfs.items()
         }
         weights = {qid: w for qid, w in weights.items() if w}
-        spark = self.spark
-        if not weights:
-            return spark.createDataFrame(
-                [], "query_id string, rank int, doc_id long, score double"
-            )
-        all_terms = sorted({t for w in weights.values() for t in w})
         avgdl = self.manifest["stats"]["avgdl"]
-        blocks = self.postings().where(F.col("term").isin(all_terms))
         # rounded sort keys need eps-relaxed pruning: a doc within half a
         # rounding step below θ can tie the k-th rounded key downstream
         eps = 0.5 * 10.0 ** (-round_scores) if round_scores is not None else 0.0
-
         tomb = self._tomb_array()
-        tomb = tomb if tomb.size else None
+        kw = dict(prune=prune, eps=eps, drop_ids=tomb if tomb.size else None)
+        schema = "query_id string, rank int, doc_id long, score double"
+
+        # a batch with no in-vocabulary term is answered without a job
+        # at any bound, as in _qtf_topk
+        if not stats or sum(nb for _, nb in stats.values()) <= LOCAL_SERVE_MAX_BLOCKS:
+            self.local_served += 1
+            import pyarrow as pa
+
+            hits = {qid: [] for qid in weights}
+            for _, g in self._local_blocks(stats):
+                for qid, hit in topk_queries(g, weights, avgdl, k, **kw).items():
+                    hits[qid].append(hit)
+            cut = {qid: _final_cut(h, k, round_scores) for qid, h in sorted(hits.items())}
+            cols = _batch_columns(cut)
+            return self.spark.createDataFrame(pa.table({
+                "query_id": pa.array(cols["query_id"], pa.string()),
+                "rank": pa.array(
+                    [r for ids, _ in cut.values() for r in range(1, ids.size + 1)], pa.int32()
+                ),
+                "doc_id": pa.array(cols["doc_id"], pa.int64()),
+                "score": pa.array(cols["score"], pa.float64()),
+            }), schema)
+        self.spark_served += 1
 
         def shard_kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-            from .wand import topk_shard
+            return pd.DataFrame(_batch_columns(topk_queries(pdf, weights, avgdl, k, **kw)))
 
-            outs = []
-            for qid, w in weights.items():
-                sub = pdf[pdf["term"].isin(w)]
-                if not len(sub):
-                    continue
-                ids, sc = topk_shard(
-                    sub, w, avgdl, k, prune=prune, eps=eps, drop_ids=tomb
-                )
-                outs.append(
-                    pd.DataFrame({"query_id": qid, "doc_id": ids, "score": sc})
-                )
-            if not outs:
-                return pd.DataFrame(
-                    {"query_id": pd.Series([], dtype=str),
-                     "doc_id": pd.Series([], dtype="int64"),
-                     "score": pd.Series([], dtype="float64")}
-                )
-            return pd.concat(outs, ignore_index=True)
-
-        per_shard = blocks.groupBy("shard").applyInPandas(
-            shard_kernel, "query_id string, doc_id long, score double"
+        per_shard = (
+            self.postings().where(F.col("term").isin(sorted(stats)))
+            .groupBy("shard").applyInPandas(
+                shard_kernel, "query_id string, doc_id long, score double"
+            )
         )
         if round_scores is not None:
             # a doc lives in exactly one shard, so per-shard scores are
@@ -2302,7 +2325,7 @@ class IndexReader:
         length-weighted global ``avgdl``, and ``bound_scale`` =
         max(1, avgdl_global / avgdl_built) so this index's stored
         block-max bounds stay upper bounds under the foreign avgdl
-        (engine/wand.py topk_shard docstring for the proof)."""
+        (engine/wand.py topk_terms docstring for the proof)."""
         import pandas as pd
 
         if avgdl is None:
@@ -2418,6 +2441,20 @@ class IndexReader:
             out = small.join(F.broadcast(meta), "doc_id", "left").orderBy("rank")
         return out
 
+    def _local_blocks(self, terms):
+        """Driver-side (shard, blocks frame) groups, shard ascending, of
+        ``terms``' posting blocks: one pyarrow read of ``postings/``
+        (hive ``shard=`` partitions, term isin pushed into the scan)."""
+        import pyarrow.compute as pc
+
+        from .postings import BLOCK_COLUMNS
+
+        if not terms:
+            return []
+        return self._arrow("postings").to_table(
+            columns=BLOCK_COLUMNS, filter=pc.field("term").isin(sorted(terms)),
+        ).to_pandas().groupby("shard", sort=True)
+
     def _local_topk(
         self, qtf_map: dict[str, float], stats: dict[str, tuple[int, int]],
         k: int, *, prune: bool, eps: float, round_scores: int | None,
@@ -2426,11 +2463,9 @@ class IndexReader:
     ) -> DataFrame:
         """_qtf_topk served in the driver process: the query terms'
         posting blocks through one pyarrow read (hive ``shard=``
-        partitions, term isin pushed into the scan), the unchanged
-        engine.wand.topk_shard per shard with the arguments the Spark
-        shard_kernel passes, then the Spark path's global rules —
-        HALF_UP rounding of each shard's finals, the exact rounded-key
-        cursor filter, and the (score DESC, doc_id ASC) k-cut. The
+        partitions, term isin pushed into the scan), engine.wand.topk_shard
+        per shard with the arguments the Spark shard_kernel passes, then
+        the Spark path's global rules (_final_cut). The
         result is built from an Arrow table, which plans as a
         LocalRelation: the caller's collect() launches no job either.
         Same columns, order and types as the Spark path."""
@@ -2438,7 +2473,6 @@ class IndexReader:
         import pyarrow as pa
         import pyarrow.compute as pc
 
-        from .postings import BLOCK_COLUMNS
         from .wand import topk_shard
 
         n = float(self.manifest["stats"]["n_docs"])
@@ -2447,38 +2481,16 @@ class IndexReader:
         drop = self._tomb_array()
         if exclude_ids:
             drop = np.union1d(drop, np.asarray(exclude_ids, dtype=np.int64))
-        drop = drop if drop.size else None
-        ids, sc = [np.empty(0, np.int64)], [np.empty(0, np.float64)]
-        if weights:
-            blocks = (
-                self._arrow("postings")
-                .to_table(
-                    columns=BLOCK_COLUMNS,
-                    filter=pc.field("term").isin(sorted(weights)),
-                )
-                .to_pandas()
-                .sort_values(["shard", "term", "block_id"], ignore_index=True)
-            )
-            for _, g in blocks.groupby("shard", sort=True):
-                i, v = topk_shard(
-                    g, weights, avgdl, k, prune=prune, eps=eps,
-                    drop_ids=drop, after=after,
-                )
-                ids.append(i)
-                sc.append(v)
-        ids, sc = np.concatenate(ids), np.concatenate(sc)
-        if round_scores is not None:
-            sc = np.array([round_half_up(v, round_scores) for v in sc.tolist()],
-                          dtype=np.float64)
-        if after is not None:
-            s_a, d_a = after
-            keep = (sc < s_a) | ((sc == s_a) & (ids > d_a))
-            ids, sc = ids[keep], sc[keep]
-        order = np.lexsort((ids, -sc))[:k]
+        hits = [
+            topk_shard(g, weights, avgdl, k, prune=prune, eps=eps,
+                       drop_ids=drop if drop.size else None, after=after)
+            for _, g in self._local_blocks(weights)
+        ]
+        ids, sc = _final_cut(hits, k, round_scores, after)
         out = pa.table({
-            "rank": pa.array(np.arange(1, order.size + 1), pa.int32()),
-            "doc_id": pa.array(ids[order], pa.int64()),
-            "score": pa.array(sc[order], pa.float64()),
+            "rank": pa.array(np.arange(1, ids.size + 1), pa.int32()),
+            "doc_id": pa.array(ids, pa.int64()),
+            "score": pa.array(sc, pa.float64()),
         })
         schema = "rank int, doc_id long, score double"
         if with_metadata:
@@ -2581,9 +2593,10 @@ class IndexReader:
     # the top-k over C is the top-k over the full set — returned.
     # Otherwise _fusion_serve returns None and the caller falls back
     # to the exhaustive path: never wrong, only slower. Scores are
-    # BIT-identical to the exhaustive path (same topk_shard term-order
-    # accumulation, same Spark expression tree), so the DuckDB oracles
-    # pinned on the recompute formula hold unchanged.
+    # BIT-identical to the exhaustive path (both sum each doc's terms in
+    # wand.topk_terms' shard-independent (-weight, term) order, under
+    # the same Spark expression tree), so the DuckDB oracles pinned on
+    # the recompute formula hold unchanged.
 
     _FUSION_TA_KPRIOR = 1024  # prior-top depth cached per reader
     _FUSION_TA_KBODY_MIN = 64  # body candidate depth floor (k' = max(4k, this))
@@ -2699,19 +2712,18 @@ class IndexReader:
         keep = keep_ids if keep_ids is not None and keep_ids.size else None
 
         def kern(pdf: pd.DataFrame) -> pd.DataFrame:
-            from .wand import topk_shard
+            from .wand import term_blocks, topk_terms
 
             weights = {t: qtf_map[t] * v for t, v in zip(pdf["term"], pdf["idf"])}
+            postings = term_blocks(pdf, avgdl)  # both passes share the decodes
             out = []
             if with_topk:
-                ids1, sc1 = topk_shard(
-                    pdf, weights, avgdl, k_body, prune=True, eps=eps
-                )
+                ids1, sc1 = topk_terms(postings, weights, k_body, prune=True, eps=eps)
                 out.append(pd.DataFrame({"doc_id": ids1, "score": sc1,
                                          "src": np.zeros(ids1.size, dtype=np.int32)}))
             if keep is not None:
-                ids2, sc2 = topk_shard(
-                    pdf, weights, avgdl, 1 << 31, prune=False, keep_ids=keep
+                ids2, sc2 = topk_terms(
+                    postings, weights, 1 << 31, prune=False, keep_ids=keep
                 )
                 out.append(pd.DataFrame({"doc_id": ids2, "score": sc2,
                                          "src": np.ones(ids2.size, dtype=np.int32)}))

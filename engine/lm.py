@@ -48,16 +48,6 @@ from .tokenizer import TOKEN_PATTERN
 LM_REF_PCT = 30  # harness reference split: mix(doc_id) % 100 < 30
 
 
-def _pairs_col(content):
-    """array<struct<w1,w2>> of ADJACENT token pairs, in order, built
-    JVM-side with zero shuffle (empty below 2 tokens). zip-of-slices
-    over the token array — the element_at-per-pair transform it
-    replaces re-tokenized the doc at EVERY pair once CollapseProject
-    inlined the regexp (80.1 s -> 0.9 s for the 4.1M-pair stream at
-    20k docs, local[8]; see textops.with_array_barrier)."""
-    return pairs_from_tokens(tokens_all_col(content))
-
-
 def lm_score(
     corpus: DataFrame,
     ref_df: DataFrame | None = None,

@@ -23,8 +23,6 @@ PageRank artifact (engine/index.py::pagerank_df).
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -59,14 +57,3 @@ SELECT doc_id,
 FROM documents
 """
 
-
-def write_pageviews(docs: DataFrame, index_dir: str) -> str:
-    """Materialize the pageview artifact under the index dir (the
-    scale-safe analog of the reference's pickled Counter)."""
-    p = os.path.join(index_dir, "pageviews")
-    synthetic_pageviews(docs).write.mode("overwrite").parquet(p)
-    return p
-
-
-def load_pageviews(spark, index_dir: str) -> DataFrame:
-    return spark.read.parquet(os.path.join(index_dir, "pageviews"))

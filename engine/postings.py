@@ -88,27 +88,31 @@ def decode_block(row) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
     return ids, tfs, dls
 
 
+def decode_blocks(
+    n: np.ndarray, ids_blob: bytes, tfs_blob: bytes, dls_blob: bytes
+) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """Blocks of ``n`` postings each, their blobs concatenated per
+    column → the blocks' (doc_ids, tfs, dls) back to back, in ONE varint
+    pass per column. LEB128 is self-delimiting, so this equals
+    concatenating decode_block over the blocks; each block's first gap
+    is an absolute doc_id, so the doc_id prefix sum restarts per block
+    (uint64 arithmetic wraps exactly as delta_decode's int64 sum)."""
+    total = int(n.sum())
+    csum = np.cumsum(varint_decode(ids_blob, total))
+    ends = np.cumsum(n)
+    base = np.zeros(n.size, dtype=np.uint64)
+    base[1:] = csum[ends[:-1] - 1]
+    ids = (csum - np.repeat(base, n)).view(np.int64)
+    tfs = varint_decode(tfs_blob, total).astype(np.int64)
+    dls = varint_decode(dls_blob, total).astype(np.int64)
+    return ids, tfs, dls
+
+
 BLOCK_COLUMNS = [
     "shard", "term", "block_id", "n", "first_doc_id", "last_doc_id",
     "doc_ids_blob", "tfs_blob", "doc_lens_blob", "block_max_norm",
     "block_max_tf",
 ]
-
-
-def blocks_pdf_for_group(pdf: pd.DataFrame, avgdl: float, block_docs: int) -> pd.DataFrame:
-    """applyInPandas kernel: one (shard, term) group of tokens → blocks."""
-    shard = int(pdf["shard"].iloc[0])
-    term = pdf["term"].iloc[0]
-    rows = build_blocks_for_term(
-        shard,
-        term,
-        pdf["doc_id"].to_numpy(np.int64),
-        pdf["tf"].to_numpy(np.int64),
-        pdf["doc_len"].to_numpy(np.int64),
-        avgdl,
-        block_docs,
-    )
-    return pd.DataFrame(rows, columns=BLOCK_COLUMNS)
 
 
 def blocks_pdf_for_shard(pdf: pd.DataFrame, avgdl: float, block_docs: int) -> pd.DataFrame:

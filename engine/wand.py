@@ -6,9 +6,16 @@ the WAND family that vectorizes cleanly in numpy (document-at-a-time
 WAND is a per-posting pointer chase; TAAT MaxScore does the same
 pruning with whole-array ops):
 
-1. Terms sorted by upper bound ub_t = w_t * max_block_norm desc
-   (w_t = qtf_t * idf_t; norm is the query-independent BM25 factor,
-   engine/postings.py).
+1. Terms in descending weight order, ties by term: key (-w_t, t)
+   (w_t = qtf_t * idf_t). A doc's score is the sum of its per-term
+   contributions w_t * norm (norm is the query-independent BM25
+   factor, engine/postings.py), added in this order, so the order
+   must be the same in EVERY shard: two docs with equal (tf, dl) per
+   term then get bit-equal sums wherever they live, and the global
+   cut breaks their tie by doc_id as the reference does; an order by
+   each shard's own bound w_t * max_block_norm would make such sums
+   differ in the last bit between shards. The bounds below are
+   rank-safe in any term order.
 2. OR phase: merge-accumulate full posting lists while new documents
    can still reach the current top-k floor θ (θ = k-th best partial
    score — a LOWER bound of the k-th final score, so the switch is
@@ -25,6 +32,12 @@ pruning with whole-array ops):
 All bounds are computed in float64 and compared with ≥ (SURVEY.md §7
 hard part #3). ``prune=False`` gives the exhaustive path used for the
 rank-safety cross-check.
+
+The kernel runs on TermBlocks — one (shard, term) posting list as
+numpy block columns, each block decoded at most once and only when the
+kernel needs it — so a batch builds them once per shard and scores
+every query against them (topk_queries); topk_shard is the one-query
+entry over a BLOCKS_SCHEMA frame.
 """
 
 from __future__ import annotations
@@ -32,31 +45,111 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 
-from .postings import decode_block, score_norm
+# decode_block stays importable here: tools that count kernel decodes
+# patch engine.wand.decode_block (the kernel itself decodes through
+# decode_blocks, one varint pass per term and column)
+from .postings import decode_block, decode_blocks, score_norm  # noqa: F401
+
+
+class TermBlocks:
+    """One (shard, term) posting list as block columns — ``first`` /
+    ``last`` doc_id, ``bmax`` (block_max_norm), ``off`` (posting offset
+    of each block, cumsum of n) — plus the three varint blob columns.
+    ``take`` decodes blocks lazily, each at most once, and keeps the
+    doc_ids and score norms at ``avgdl``: a term's contribution to any
+    query is then w * norm, elementwise."""
+
+    def __init__(self, first, last, bmax, n, ids_blobs, tfs_blobs, dls_blobs,
+                 avgdl: float):
+        self.first, self.last, self.bmax = first, last, bmax
+        self.n = n.astype(np.int64)
+        self.off = np.concatenate(([0], np.cumsum(self.n)))
+        self.max_norm = float(bmax.max())
+        self._blobs = (ids_blobs, tfs_blobs, dls_blobs)
+        self._avgdl = avgdl
+        self._ids = np.empty(self.off[-1], np.int64)
+        self._norm = np.empty(self.off[-1], np.float64)
+        self._todo = np.ones(n.size, bool)
+
+    def _positions(self, sel: np.ndarray) -> np.ndarray:
+        """Posting positions of the blocks ``sel``, back to back."""
+        n = self.n[sel]
+        shift = self.off[sel] - np.concatenate(([0], np.cumsum(n)[:-1]))
+        return np.arange(int(n.sum())) + np.repeat(shift, n)
+
+    def take(self, sel: np.ndarray | None = None) -> tuple[np.ndarray, np.ndarray]:
+        """(doc_ids, norms) of the blocks ``sel`` (ascending block
+        indices; every block when None), in doc_id order. Read-only:
+        with ``sel`` None they are the cached arrays themselves."""
+        todo = np.flatnonzero(self._todo) if sel is None else sel[self._todo[sel]]
+        if todo.size:
+            ids, tfs, dls = decode_blocks(
+                self.n[todo], *(b"".join(col[todo]) for col in self._blobs)
+            )
+            pos = slice(None) if todo.size == self.n.size else self._positions(todo)
+            self._ids[pos] = ids
+            self._norm[pos] = score_norm(tfs, dls, self._avgdl)
+            self._todo[todo] = False
+        if sel is None or sel.size == self.n.size:
+            return self._ids, self._norm
+        pos = self._positions(sel)
+        return self._ids[pos], self._norm[pos]
+
+
+def term_blocks(blocks: pd.DataFrame, avgdl: float, terms=None) -> dict[str, TermBlocks]:
+    """One shard's BLOCKS_SCHEMA rows (any row order) → {term:
+    TermBlocks} in block_id order; only ``terms`` when given."""
+    if not len(blocks):
+        return {}
+    codes, uniq = pd.factorize(blocks["term"].to_numpy())
+    order = np.lexsort((blocks["block_id"].to_numpy(), codes))
+    codes = codes[order]
+    cols = [
+        blocks[c].to_numpy()[order]
+        for c in ("first_doc_id", "last_doc_id", "block_max_norm", "n",
+                  "doc_ids_blob", "tfs_blob", "doc_lens_blob")
+    ]
+    cuts = np.flatnonzero(np.diff(codes)) + 1
+    out = {}
+    for lo, hi in zip(np.r_[0, cuts], np.r_[cuts, codes.size]):
+        t = uniq[codes[lo]]
+        if terms is None or t in terms:
+            out[t] = TermBlocks(*(c[lo:hi] for c in cols), avgdl)
+    return out
 
 
 def _merge_accumulate(
     acc_ids: np.ndarray, acc_sc: np.ndarray, ids: np.ndarray, sc: np.ndarray
 ):
+    """OR semantics over doc_id-sorted unique ``ids``: one add for docs
+    already accumulated, a sorted insert for new ones."""
     if acc_ids.size == 0:
-        order = np.argsort(ids, kind="stable")
-        return ids[order], sc[order]
-    both = np.concatenate([acc_ids, ids])
-    scores = np.concatenate([acc_sc, sc])
-    uid, inv = np.unique(both, return_inverse=True)
-    out = np.zeros(uid.size, dtype=np.float64)
-    np.add.at(out, inv, scores)
-    return uid, out
+        return ids.copy(), sc
+    pos = np.searchsorted(acc_ids, ids)
+    miss = ~_update_existing(acc_ids, acc_sc, ids, sc, pos)
+    # slots of the new docs in the merged order
+    new = pos[miss] + np.arange(int(miss.sum()))
+    old = np.ones(acc_ids.size + new.size, bool)
+    old[new] = False
+    out_ids = np.empty(old.size, np.int64)
+    out_sc = np.empty(old.size, np.float64)
+    out_ids[new], out_sc[new] = ids[miss], sc[miss]
+    out_ids[old], out_sc[old] = acc_ids, acc_sc
+    return out_ids, out_sc
 
 
 def _update_existing(
-    acc_ids: np.ndarray, acc_sc: np.ndarray, ids: np.ndarray, sc: np.ndarray
-):
-    """Add sc only for ids already present in acc (AND semantics)."""
-    pos = np.searchsorted(acc_ids, ids)
-    pos_c = np.clip(pos, 0, acc_ids.size - 1)
+    acc_ids: np.ndarray, acc_sc: np.ndarray, ids: np.ndarray, sc: np.ndarray,
+    pos: np.ndarray | None = None,
+) -> np.ndarray:
+    """Add sc only for ids already present in acc (AND semantics, in
+    place; ``ids`` unique) → the hit mask."""
+    if pos is None:
+        pos = np.searchsorted(acc_ids, ids)
+    pos_c = np.minimum(pos, acc_ids.size - 1)
     hit = acc_ids[pos_c] == ids
-    np.add.at(acc_sc, pos_c[hit], sc[hit])
+    acc_sc[pos_c[hit]] += sc[hit]
+    return hit
 
 
 def _theta(acc_sc: np.ndarray, k: int) -> float:
@@ -124,8 +217,45 @@ def topk_shard(
     bound_scale: float = 1.0,
 ) -> tuple[np.ndarray, np.ndarray]:
     """Score one shard's blocks for one query → (doc_ids, scores) of the
-    shard-local top-k (unsorted). ``blocks`` has the BLOCKS_SCHEMA
-    columns for the query's terms only.
+    shard-local top-k (unsorted): topk_terms over the TermBlocks of
+    ``blocks`` (BLOCKS_SCHEMA columns; terms outside ``weights`` are
+    ignored) built at ``avgdl``."""
+    return topk_terms(
+        term_blocks(blocks, avgdl, weights), weights, k, prune=prune, eps=eps,
+        drop_ids=drop_ids, keep_ids=keep_ids, after=after,
+        bound_scale=bound_scale,
+    )
+
+
+def topk_queries(
+    blocks: pd.DataFrame,
+    queries: dict[str, dict[str, float]],
+    avgdl: float,
+    k: int,
+    **kw,
+) -> dict[str, tuple[np.ndarray, np.ndarray]]:
+    """Every query of a batch (id → weights) over one shard's blocks →
+    {id: topk_terms result}. The TermBlocks are built once and shared,
+    so each block is decoded at most once per batch."""
+    postings = term_blocks(blocks, avgdl)
+    return {q: topk_terms(postings, w, k, **kw) for q, w in queries.items()}
+
+
+def topk_terms(
+    postings: dict[str, TermBlocks],
+    weights: dict[str, float],
+    k: int,
+    *,
+    prune: bool = True,
+    eps: float = 0.0,
+    drop_ids: np.ndarray | None = None,
+    keep_ids: np.ndarray | None = None,
+    after: tuple[float, int] | None = None,
+    bound_scale: float = 1.0,
+) -> tuple[np.ndarray, np.ndarray]:
+    """Score one query (term → weight) over one shard's ``postings`` →
+    (doc_ids, scores) of the shard-local top-k (unsorted). Terms of
+    ``weights`` absent from ``postings`` contribute nothing.
 
     ``eps`` relaxes every θ-based drop to ``θ - eps``: the pruning is
     then rank-safe with respect to a sort key that rounds scores to a
@@ -135,10 +265,9 @@ def topk_shard(
     sort key as the k-th and win the doc_id-asc tiebreak downstream.
 
     ``drop_ids`` (a SORTED int64 array — index tombstones) removes docs
-    at block-decode time in the OR phase, BEFORE they can enter the
-    accumulator; every later θ drop then remains rank-safe over live
-    docs only, and the AND phase needs no mask (it only updates docs
-    already accumulated).
+    in the OR phase, BEFORE they can enter the accumulator; every later
+    θ drop then remains rank-safe over live docs only, and the AND
+    phase needs no mask (it only updates docs already accumulated).
 
     ``keep_ids`` (a SORTED int64 array — this shard's metadata-filter
     survivors) inverts that mask: only listed docs may enter the
@@ -171,26 +300,19 @@ def topk_shard(
     max(1, avgdl_g/avgdl_b) (the ratio is monotone in dl and tends to
     avgdl_g/avgdl_b as dl→∞), so passing that factor keeps every
     θ-comparison rank-safe. Scores themselves are always computed
-    exactly from the decoded (tf, dl) at the passed avgdl — the scale
-    only loosens pruning, never changes a result."""
+    exactly from the decoded (tf, dl) at the postings' avgdl — the
+    scale only loosens pruning, never changes a result."""
+    empty = np.empty(0, np.int64), np.empty(0, np.float64)
     if keep_ids is not None and keep_ids.size == 0:
-        return np.empty(0, np.int64), np.empty(0, np.float64)
-    by_term: dict[str, pd.DataFrame] = {
-        t: g for t, g in blocks.groupby("term", sort=False) if t in weights
-    }
-    if not by_term:
-        return np.empty(0, np.int64), np.empty(0, np.float64)
-
-    term_ub = {
-        t: weights[t] * bound_scale * float(g["block_max_norm"].max())
-        for t, g in by_term.items()
-    }
-    terms = sorted(term_ub, key=lambda t: -term_ub[t])
-    ubs = np.array([term_ub[t] for t in terms])
+        return empty
+    # shard-independent order (module docstring, step 1)
+    terms = sorted((t for t in weights if t in postings), key=lambda t: (-weights[t], t))
+    if not terms:
+        return empty
+    ubs = np.array([weights[t] * bound_scale * postings[t].max_norm for t in terms])
     remaining_after = np.concatenate([np.cumsum(ubs[::-1])[::-1][1:], [0.0]])
 
-    acc_ids = np.empty(0, np.int64)
-    acc_sc = np.empty(0, np.float64)
+    acc_ids, acc_sc = empty
 
     def _acc_theta(rem: float, evict: bool) -> float:
         """θ over docs allowed to witness the top-k floor. Plain top-k:
@@ -216,48 +338,42 @@ def topk_shard(
 
     for i, t in enumerate(terms):
         w = weights[t]
-        g = by_term[t]
+        tb = postings[t]
         theta = _acc_theta(ubs[i] + remaining_after[i], evict=False)
         and_phase = prune and np.isfinite(theta) and (ubs[i] + remaining_after[i]) < theta
 
         if not and_phase:
-            # OR phase: decode every block of t, merge-accumulate
-            parts_ids, parts_sc = [], []
-            for row in g.itertuples(index=False):
-                if keep_ids is not None:
-                    # skip blocks with no filter-surviving doc at all
-                    lo = np.searchsorted(keep_ids, row.first_doc_id, "left")
-                    hi = np.searchsorted(keep_ids, row.last_doc_id, "right")
-                    if lo >= hi:
-                        continue
-                ids, tfs, dls = decode_block(row)
-                if keep_ids is not None:
-                    m = _isin_sorted(ids, keep_ids)
-                    ids, tfs, dls = ids[m], tfs[m], dls[m]
-                if drop_ids is not None and drop_ids.size:
-                    live = ~_isin_sorted(ids, drop_ids)
-                    ids, tfs, dls = ids[live], tfs[live], dls[live]
-                parts_ids.append(ids)
-                parts_sc.append(w * score_norm(tfs, dls, avgdl))
-            if not parts_ids:
-                continue
-            ids = np.concatenate(parts_ids)
-            sc = np.concatenate(parts_sc)
-            acc_ids, acc_sc = _merge_accumulate(acc_ids, acc_sc, ids, sc)
+            # OR phase: every block of t (under a filter, only blocks
+            # whose range holds a kept doc), merge-accumulated
+            if keep_ids is not None:
+                lo = np.searchsorted(keep_ids, tb.first, "left")
+                hi = np.searchsorted(keep_ids, tb.last, "right")
+                sel = np.flatnonzero(lo < hi)
+                if not sel.size:
+                    continue
+                ids, norm = tb.take(sel)
+                m = _isin_sorted(ids, keep_ids)
+                ids, norm = ids[m], norm[m]
+            else:
+                ids, norm = tb.take()
+            if drop_ids is not None and drop_ids.size:
+                live = ~_isin_sorted(ids, drop_ids)
+                ids, norm = ids[live], norm[live]
+            if ids.size:
+                acc_ids, acc_sc = _merge_accumulate(acc_ids, acc_sc, ids, w * norm)
         else:
             if acc_ids.size == 0:
                 break
             acc_max = float(acc_sc.max())
-            for row in g.itertuples(index=False):
-                lo = np.searchsorted(acc_ids, row.first_doc_id, side="left")
-                hi = np.searchsorted(acc_ids, row.last_doc_id, side="right")
-                if lo >= hi:
-                    continue  # no accumulator doc in this block's range
-                block_ub = w * bound_scale * row.block_max_norm
-                if acc_max + block_ub + remaining_after[i] < theta:
-                    continue  # even the best candidate cannot profit
-                ids, tfs, dls = decode_block(row)
-                _update_existing(acc_ids, acc_sc, ids, w * score_norm(tfs, dls, avgdl))
+            # decode only blocks whose range holds an accumulator doc
+            # and whose bound lets its best candidate still profit
+            lo = np.searchsorted(acc_ids, tb.first, side="left")
+            hi = np.searchsorted(acc_ids, tb.last, side="right")
+            block_ub = w * bound_scale * tb.bmax
+            sel = np.flatnonzero((lo < hi) & ~(acc_max + block_ub + remaining_after[i] < theta))
+            if sel.size:
+                ids, norm = tb.take(sel)
+                _update_existing(acc_ids, acc_sc, ids, w * norm)
             # prune accumulator docs that can no longer reach top-k
             theta = _acc_theta(remaining_after[i], evict=True)
             if np.isfinite(theta):

@@ -173,3 +173,82 @@ def test_search_after_kernel_matches_brute_force(data):
     want_ids, want_sc = _brute_page(m_ids, m_sc, s_a, d_a, k, nd)
     assert list(got_ids) == list(want_ids)
     assert np.allclose(got_sc, want_sc, rtol=0, atol=1e-9)
+
+
+def _blocks(shard, postings, avgdl, block_docs=128):
+    """{term: (doc_ids, tfs, dls)} → one shard's BLOCKS_SCHEMA frame."""
+    rows = []
+    for t, (ids, tfs, dls) in postings.items():
+        rows.extend(build_blocks_for_term(
+            shard, t, np.asarray(ids, np.int64), np.asarray(tfs, np.int64),
+            np.asarray(dls, np.int64), avgdl, block_docs,
+        ))
+    return pd.DataFrame(rows, columns=BLOCK_COLUMNS)
+
+
+def test_term_order_is_shard_independent():
+    """Two docs with identical per-term (tf, dl) in different shards get
+    bit-equal scores, so the global cut ranks the smaller doc_id first.
+    Each shard has a helper doc that lifts a DIFFERENT term's block-max
+    bound (a per-shard bound order would add the three contributions in
+    a different order in each shard), and the weights are picked so the
+    two orders round differently: (1.3 + 2.9) + 1.7 != (1.7 + 2.9) + 1.3."""
+    from engine.wand import topk_shard
+
+    avgdl, w = 100.0, {"a": 1.3, "b": 1.7, "c": 2.9}
+    assert (w["a"] + w["c"]) + w["b"] != (w["b"] + w["c"]) + w["a"]
+    target = ([1], [100])  # tf 1 at dl = avgdl: each contribution is w exactly
+
+    def shard(sid, doc, lifted, helper):
+        post = {t: ([doc], *target) for t in w}
+        post[lifted] = ([doc, helper], [1, 18], [100, 20])
+        return _blocks(sid, post, avgdl)
+
+    ids, sc = map(np.concatenate, zip(
+        topk_shard(shard(0, 100, "a", 101), w, avgdl, 10),
+        topk_shard(shard(1, 50, "b", 51), w, avgdl, 10),
+    ))
+    score = dict(zip(ids.tolist(), sc.tolist()))
+    assert score[50] == score[100]
+    ranked = ids[np.lexsort((ids, -sc))].tolist()
+    assert ranked.index(50) < ranked.index(100)
+
+
+@given(st.data())
+@settings(max_examples=40, deadline=None)
+def test_shared_term_blocks_equal_one_query_entry(data):
+    """topk_terms over TermBlocks shared by a sequence of queries (blocks
+    decoded lazily by whichever query needs them first) returns exactly
+    what topk_shard returns on a fresh frame in any row order —
+    including keep_ids, after and bound_scale."""
+    from engine.wand import term_blocks, topk_shard, topk_terms
+
+    rng = np.random.RandomState(data.draw(st.integers(0, 2**31 - 1)))
+    avgdl, vocab = 40.0, [f"t{i}" for i in range(5)]
+    doc_ids = np.unique(rng.randint(0, 2**62, size=300))
+    dls = rng.randint(3, 120, size=doc_ids.size)
+    post = {}
+    for t in vocab:
+        m = rng.rand(doc_ids.size) < rng.uniform(0.05, 0.8)
+        if m.any():
+            post[t] = (doc_ids[m], rng.randint(1, 25, size=int(m.sum())), dls[m])
+    blocks = _blocks(3, post, avgdl, data.draw(st.sampled_from([2, 16, 128])))
+    shared = term_blocks(blocks, avgdl)
+    for _ in range(4):
+        terms = rng.choice(vocab, size=rng.randint(1, len(vocab) + 1), replace=False)
+        weights = {str(t): float(rng.uniform(0.2, 3.0)) for t in terms}
+        kw = dict(
+            prune=data.draw(st.booleans()),
+            eps=data.draw(st.sampled_from([0.0, 5e-7])),
+            drop_ids=np.sort(rng.choice(doc_ids, 20, replace=False)),
+            bound_scale=data.draw(st.sampled_from([1.0, 1.5])),
+        )
+        if data.draw(st.booleans()):
+            kw["keep_ids"] = np.sort(rng.choice(doc_ids, rng.randint(0, 150), replace=False))
+        if data.draw(st.booleans()):
+            kw["after"] = (float(rng.uniform(0.5, 4.0)), int(rng.choice(doc_ids)))
+        k = data.draw(st.integers(1, 12))
+        want = topk_shard(blocks.sample(frac=1.0, random_state=rng), weights, avgdl, k, **kw)
+        got = topk_terms(shared, weights, k, **kw)
+        assert [np.array_equal(a[np.argsort(want[0])], b[np.argsort(got[0])])
+                for a, b in zip(want, got)] == [True, True]

@@ -1,8 +1,10 @@
-"""Driver-served interactive queries (IndexReader._qtf_topk dispatch).
+"""Driver-served queries and batches (IndexReader._qtf_topk and
+bm25_topk_batch dispatch).
 
-At Σ n_blocks ≤ engine.index.LOCAL_SERVE_MAX_BLOCKS a query is served in
-the driver process — pyarrow pruned read, the same topk_shard kernel,
-the Spark path's merge rules — and above it by the applyInPandas job.
+At Σ n_blocks ≤ engine.index.LOCAL_SERVE_MAX_BLOCKS a query (for a
+batch: the union of its queries' terms) is served in the driver process
+— pyarrow pruned read, the same engine.wand kernel, the Spark path's
+merge rules — and above it by the applyInPandas job.
 Each test forces one path or the other by monkeypatching the bound
 (a test-only switch, not a setting) and requires the two to be rank-
 AND score-identical, with the same columns, order and types. The
@@ -191,3 +193,72 @@ def test_local_path_launches_no_spark_job(spark, readers):
         sc.setLocalProperty("spark.job.description", None)
     assert rows and fresh.local_served == 1 and fresh.spark_served == 0
     assert list(sc.statusTracker().getJobIdsForGroup("local-serving-zero-jobs")) == []
+
+
+BATCH_OOV = "zzzunknownterm qqqnothing"
+
+
+def _batch(monkeypatch, reader, qmap, k=K, **kw):
+    """bm25_topk_batch on both forced paths → (local, spark) rows, each
+    sorted by (query_id, rank); the Spark path's row order is free."""
+    local, remote = both(monkeypatch, reader, lambda r: r.bm25_topk_batch(qmap, k, **kw))
+    return sorted(local), sorted(remote)
+
+
+@pytest.mark.parametrize("prune", [True, False])
+@pytest.mark.parametrize("round_scores", [None, 6])
+def test_batch_parity(monkeypatch, readers, queries, prune, round_scores):
+    """The driver-served batch equals the applyInPandas batch bit for
+    bit; an all-OOV query is omitted on both paths."""
+    reader, _ = readers
+    qmap = {f"q{i:02d}": q["text"] for i, q in enumerate(_scored(reader, queries))}
+    qmap["oov"] = BATCH_OOV
+    local, remote = _batch(monkeypatch, reader, qmap, prune=prune,
+                           round_scores=round_scores)
+    assert local == remote
+    assert {row[0] for row in local} == set(qmap) - {"oov"}
+
+
+def test_batch_parity_tombstones_and_k_beyond_matches(monkeypatch, readers, queries):
+    _, tomb = readers
+    dead = set(tomb._tomb_array().tolist())
+    qmap = {f"q{i:02d}": q["text"] for i, q in enumerate(_scored(tomb, queries))}
+    local, remote = _batch(monkeypatch, tomb, qmap, round_scores=6)
+    assert local == remote and local
+    assert not dead & {row[2] for row in local}
+    rare = tomb.dictionary().orderBy("df", "term").first()["term"]
+    local, remote = _batch(monkeypatch, tomb, {"rare": rare, "q": qmap["q00"]}, k=500)
+    assert local == remote
+    assert 0 < sum(row[0] == "rare" for row in local) < 500
+
+
+def test_batch_without_vocabulary_needs_no_job(monkeypatch, readers):
+    """An empty batch and an all-OOV batch are answered locally on
+    either bound, with the batch schema and no rows."""
+    reader, _ = readers
+    for bound in (LOCAL, SPARK):
+        monkeypatch.setattr(engine.index, "LOCAL_SERVE_MAX_BLOCKS", bound)
+        for qmap in ({}, {"a": BATCH_OOV, "b": "the and of"}):
+            served = reader.local_served
+            df = reader.bm25_topk_batch(qmap, K)
+            assert reader.local_served == served + 1
+            assert df.columns == ["query_id", "rank", "doc_id", "score"]
+            assert df.collect() == []
+
+
+def test_local_batch_launches_no_spark_job(spark, readers, queries):
+    """A driver-served batch on a tombstoned index — dictionary,
+    tombstones and postings reads plus the result's collect() —
+    registers zero Spark jobs."""
+    _, tomb = readers
+    fresh = IndexReader(spark, tomb.dir)  # tombstones not yet loaded
+    qmap = {f"q{i}": q["text"] for i, q in enumerate(queries[:6])}
+    sc = spark.sparkContext
+    sc.setJobGroup("local-batch-zero-jobs", "local batch")
+    try:
+        rows = fresh.bm25_topk_batch(qmap, K).collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert rows and fresh.local_served == 1 and fresh.spark_served == 0
+    assert list(sc.statusTracker().getJobIdsForGroup("local-batch-zero-jobs")) == []
