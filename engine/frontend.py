@@ -1116,11 +1116,12 @@ class SearchService:
 
     def msearch(self, queries: list[str], k: int = 10) -> list[list]:
         """[query_id, rank, doc_id, score] for N queries — the ES
-        _msearch analog. Index-backed: ONE Spark job for the whole
-        batch (IndexReader.bm25_topk_batch — one pruned postings scan
-        over the union of all query terms; single-query latency is
-        job-launch bound, so batch throughput scales with queries/job).
-        Recompute fallback: one job per query over a SHARED persisted
+        _msearch analog. Index-backed: IndexReader.bm25_topk_batch —
+        each shard's postings of the union of all query terms decoded
+        once and shared by every query; served in the driver with no
+        Spark job while the union's Σ n_blocks and the per-query mass
+        are small (engine.index.LOCAL_BATCH_MASS_FACTOR), else in ONE
+        Spark job for the whole batch. Recompute fallback: one job per query over a SHARED persisted
         tokenize (the corpus tokenizes once, not N times)."""
         qmap = {f"q{i}": q for i, q in enumerate(queries)}
         if self.reader is not None:
@@ -1390,8 +1391,8 @@ def create_app(service: SearchService):
 
     @app.route("/msearch")
     def msearch():
-        # ?queries=a|b|c — pipe-separated batch, one Spark job when an
-        # index is bound
+        # ?queries=a|b|c — pipe-separated batch (index-bound: the
+        # bm25_topk_batch dispatch, driver or one Spark job)
         qs = [q for q in request.args.get("queries", "").split("|") if q]
         return jsonify(service.msearch(qs))
 

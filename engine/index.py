@@ -59,10 +59,28 @@ MANIFEST = "manifest.json"
 # local kernel is serial over shards, while the Spark path runs shards
 # in parallel, so on hosts with more cores the crossover moves down.
 # The bound also caps the driver-side read at a few MB of blocks.
-# bm25_topk_batch applies it to Σ n_blocks of the UNION of its queries'
-# terms: the batch decodes each block once for all its queries, so its
-# driver-side cost follows the union, not the number of queries.
 LOCAL_SERVE_MAX_BLOCKS = 4096
+
+# bm25_topk_batch serves a batch in the driver when the UNION of its
+# queries' terms has Σ n_blocks ≤ LOCAL_SERVE_MAX_BLOCKS and the batch's
+# per-query mass Σ_q Σ_{t∈q} n_blocks ≤ this factor times that bound: it
+# decodes each block of the union once, but runs the kernel once per
+# (query, shard), serially, so its cost grows with both. Measured with
+# the shared-decode kernel: bm25_topk_batch(qs, 10).collect(),
+# gen_corpus(64 000 docs), 16 shards, local[4] on a 4-cpu host,
+# median of 3, ms:
+#   union  Σ_q mass   local  Spark     union  Σ_q mass   local  Spark
+#   1 153     5 535     153    655     4 080     5 135     246    553
+#   1 045    19 983     265    758     4 144    20 892     437    668
+#   1 080    31 041     466  1 135     4 080    31 037     559    803
+#   1 109    53 232     771  1 302     4 144    41 740     688    751
+#   2 079    85 433     864  1 073     4 011    60 948     838    850
+#   1 142   292 352   2 971  3 147     4 011    81 151   1 034    796
+# At a union near the bound the crossover is at Σ_q ≈ 60 k blocks; the
+# mass bound (8 x 4 096 = 32 768) sits ~2x below it, for the same
+# reason the union bound sits below the one-query crossover. A
+# one-query batch (Σ_q = union) follows the one-query rule.
+LOCAL_BATCH_MASS_FACTOR = 8
 
 
 def _final_cut(hits, k: int, round_scores: int | None,
@@ -86,15 +104,26 @@ def _final_cut(hits, k: int, round_scores: int | None,
     return ids[order], sc[order]
 
 
-def _batch_columns(hits) -> dict:
-    """{query_id: (doc_ids, scores)} → query_id / doc_id / score columns."""
+def _batch_table(hits, rank: bool = False):
+    """{query_id: (doc_ids, scores)} → Arrow table of query_id / doc_id /
+    score rows, with rank (1.. in each query's given order) after
+    query_id when ``rank``."""
     import numpy as np
+    import pyarrow as pa
 
-    return {
-        "query_id": [q for q, (ids, _) in hits.items() for _ in range(ids.size)],
-        "doc_id": np.concatenate([np.empty(0, np.int64)] + [i for i, _ in hits.values()]),
-        "score": np.concatenate([np.empty(0, np.float64)] + [v for _, v in hits.values()]),
-    }
+    cols = {"query_id": pa.array(
+        [q for q, (ids, _) in hits.items() for _ in range(ids.size)], pa.string()
+    )}
+    if rank:
+        cols["rank"] = pa.array(np.concatenate(
+            [np.empty(0, np.int32)]
+            + [np.arange(1, ids.size + 1, dtype=np.int32) for ids, _ in hits.values()]
+        ))
+    cols["doc_id"] = pa.array(
+        np.concatenate([np.empty(0, np.int64)] + [i for i, _ in hits.values()]))
+    cols["score"] = pa.array(
+        np.concatenate([np.empty(0, np.float64)] + [v for _, v in hits.values()]))
+    return pa.table(cols)
 
 
 def _write_manifest(out_dir: str, m: dict) -> None:
@@ -1363,10 +1392,11 @@ class IndexReader:
         the union of the batch's terms. Each shard's blocks of that
         union become TermBlocks once (engine/wand.py: every block
         decoded at most once, shared by all queries of the batch) and
-        wand.topk_queries scores every query against them (SURVEY.md
-        §3.3 batch evaluation). At Σ n_blocks ≤ LOCAL_SERVE_MAX_BLOCKS
-        the batch is served in the driver process with no Spark job;
-        above it the same per-shard kernel runs in one applyInPandas
+        wand.topk_terms scores every query against them (SURVEY.md
+        §3.3 batch evaluation). A batch whose union and per-query
+        posting mass are both small (LOCAL_BATCH_MASS_FACTOR) is served
+        in the driver process with no Spark job; otherwise the same
+        per-shard kernel runs in one applyInPandas
         over the isin-pruned postings, followed by a per-query window
         rank. Both paths apply the same rules: HALF_UP rounding of each
         shard's finals, then the (score DESC, doc_id ASC) k-cut."""
@@ -1374,7 +1404,7 @@ class IndexReader:
 
         from collections import Counter
 
-        from .wand import topk_queries
+        from .wand import term_blocks, topk_terms
 
         qtfs = {
             qid: Counter(tokenize(q, use_stem=self.use_stem))
@@ -1396,30 +1426,30 @@ class IndexReader:
         kw = dict(prune=prune, eps=eps, drop_ids=tomb if tomb.size else None)
         schema = "query_id string, rank int, doc_id long, score double"
 
-        # a batch with no in-vocabulary term is answered without a job
-        # at any bound, as in _qtf_topk
-        if not stats or sum(nb for _, nb in stats.values()) <= LOCAL_SERVE_MAX_BLOCKS:
+        # dispatch rule: LOCAL_BATCH_MASS_FACTOR. A batch with no
+        # in-vocabulary term is answered without a job at any bound, as
+        # in _qtf_topk
+        union = sum(nb for _, nb in stats.values())
+        mass = sum(stats[t][1] for w in weights.values() for t in w)
+        if not stats or (
+            union <= LOCAL_SERVE_MAX_BLOCKS
+            and mass <= LOCAL_BATCH_MASS_FACTOR * LOCAL_SERVE_MAX_BLOCKS
+        ):
             self.local_served += 1
-            import pyarrow as pa
-
             hits = {qid: [] for qid in weights}
             for _, g in self._local_blocks(stats):
-                for qid, hit in topk_queries(g, weights, avgdl, k, **kw).items():
-                    hits[qid].append(hit)
+                postings = term_blocks(g, avgdl)
+                for qid, w in weights.items():
+                    hits[qid].append(topk_terms(postings, w, k, **kw))
             cut = {qid: _final_cut(h, k, round_scores) for qid, h in sorted(hits.items())}
-            cols = _batch_columns(cut)
-            return self.spark.createDataFrame(pa.table({
-                "query_id": pa.array(cols["query_id"], pa.string()),
-                "rank": pa.array(
-                    [r for ids, _ in cut.values() for r in range(1, ids.size + 1)], pa.int32()
-                ),
-                "doc_id": pa.array(cols["doc_id"], pa.int64()),
-                "score": pa.array(cols["score"], pa.float64()),
-            }), schema)
+            return self.spark.createDataFrame(_batch_table(cut, rank=True), schema)
         self.spark_served += 1
 
         def shard_kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-            return pd.DataFrame(_batch_columns(topk_queries(pdf, weights, avgdl, k, **kw)))
+            postings = term_blocks(pdf, avgdl)
+            return _batch_table({
+                qid: topk_terms(postings, w, k, **kw) for qid, w in weights.items()
+            }).to_pandas()
 
         per_shard = (
             self.postings().where(F.col("term").isin(sorted(stats)))

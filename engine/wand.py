@@ -35,9 +35,9 @@ rank-safety cross-check.
 
 The kernel runs on TermBlocks — one (shard, term) posting list as
 numpy block columns, each block decoded at most once and only when the
-kernel needs it — so a batch builds them once per shard and scores
-every query against them (topk_queries); topk_shard is the one-query
-entry over a BLOCKS_SCHEMA frame.
+kernel needs it — so a batch builds them once per shard (term_blocks)
+and runs topk_terms for every query against them; topk_shard is the
+one-query entry over a BLOCKS_SCHEMA frame.
 """
 
 from __future__ import annotations
@@ -225,20 +225,6 @@ def topk_shard(
         drop_ids=drop_ids, keep_ids=keep_ids, after=after,
         bound_scale=bound_scale,
     )
-
-
-def topk_queries(
-    blocks: pd.DataFrame,
-    queries: dict[str, dict[str, float]],
-    avgdl: float,
-    k: int,
-    **kw,
-) -> dict[str, tuple[np.ndarray, np.ndarray]]:
-    """Every query of a batch (id → weights) over one shard's blocks →
-    {id: topk_terms result}. The TermBlocks are built once and shared,
-    so each block is decoded at most once per batch."""
-    postings = term_blocks(blocks, avgdl)
-    return {q: topk_terms(postings, w, k, **kw) for q, w in queries.items()}
 
 
 def topk_terms(

@@ -239,8 +239,10 @@ def main() -> None:
         print("metrics:", json.dumps(rep))
 
     if args.batch:
-        # one job for the whole set (SURVEY.md §3.3) — amortizes the
-        # fixed per-job cost that dominates single-query latency
+        # the whole set at once (SURVEY.md §3.3): postings decoded once
+        # per shard for all queries; served in the driver while the
+        # union's and the per-query posting mass are small, else by one
+        # Spark job (engine.index.LOCAL_BATCH_MASS_FACTOR)
         qmap = {str(q["query_id"]): q["text"] for q in queries}
         t = time.perf_counter()
         df = reader.bm25_topk_batch(qmap, args.k, prune=not args.exhaustive)

@@ -2,7 +2,8 @@
 bm25_topk_batch dispatch).
 
 At Σ n_blocks ≤ engine.index.LOCAL_SERVE_MAX_BLOCKS a query (for a
-batch: the union of its queries' terms) is served in the driver process
+batch: the union of its queries' terms, with the per-query mass under
+LOCAL_BATCH_MASS_FACTOR times the bound) is served in the driver process
 — pyarrow pruned read, the same engine.wand kernel, the Spark path's
 merge rules — and above it by the applyInPandas job.
 Each test forces one path or the other by monkeypatching the bound
@@ -262,3 +263,22 @@ def test_local_batch_launches_no_spark_job(spark, readers, queries):
         sc.setLocalProperty("spark.job.description", None)
     assert rows and fresh.local_served == 1 and fresh.spark_served == 0
     assert list(sc.statusTracker().getJobIdsForGroup("local-batch-zero-jobs")) == []
+
+
+def test_batch_dispatch_bounds_per_query_mass(monkeypatch, readers, queries):
+    """The driver runs the kernel once per query, so a batch whose union
+    sits at the bound goes to Spark once its per-query mass passes
+    LOCAL_BATCH_MASS_FACTOR times the bound — with the same rows."""
+    reader, _ = readers
+    text = _scored(reader, queries)[0]["text"]
+    terms = set(reader.query_weights(text))
+    union = sum(nb for _, nb in reader._term_stats(terms).values())
+    monkeypatch.setattr(engine.index, "LOCAL_SERVE_MAX_BLOCKS", union)
+    rows = []
+    for n, served in ((engine.index.LOCAL_BATCH_MASS_FACTOR, (1, 0)),
+                      (engine.index.LOCAL_BATCH_MASS_FACTOR + 1, (0, 1))):
+        before = (reader.local_served, reader.spark_served)
+        df = reader.bm25_topk_batch({f"q{i}": text for i in range(n)}, K)
+        assert (reader.local_served - before[0], reader.spark_served - before[1]) == served
+        rows.append(sorted(r[1:] for r in _rows(df) if r[0] == "q0"))
+    assert rows[0] == rows[1] and rows[0]
