@@ -134,46 +134,28 @@ def collapse_topk_from_index(reader, query: str, k: int = 10, *,
     collapse. Rank-identical to collapse_topk (same DuckDB oracle)."""
     import pandas as pd
 
-    from .query import idf_col
-
-    spark = reader.spark
-    out_schema = "rank int, doc_id long, repo string, score double"
-    qtf_map = {
-        t: float(c)
-        for t, c in Counter(tokenize(query, use_stem=reader.use_stem)).items()
-    }
-    if not qtf_map:
-        return spark.createDataFrame([], out_schema)
-    avgdl = reader.manifest["stats"]["avgdl"]
-    n = reader.manifest["stats"]["n_docs"]
-    dic = (
-        reader.dictionary()
-        .where(F.col("term").isin(list(qtf_map)))
-        .select(
-            "term",
-            idf_col(F.col("df").cast("double"), F.lit(float(n))).alias("idf"),
+    qtf = Counter(tokenize(query, use_stem=reader.use_stem))
+    weights = reader._weights({"": qtf})[0][""]
+    if not weights:
+        return reader.spark.createDataFrame(
+            [], "rank int, doc_id long, repo string, score double"
         )
-    )
-    blocks = reader.postings().where(F.col("term").isin(list(qtf_map))).join(
-        F.broadcast(dic), "term"
-    )
+    avgdl = reader.manifest["stats"]["avgdl"]
     tomb = reader._tomb_array()
     tomb = tomb if tomb.size else None
 
     def shard_kernel(pdf: pd.DataFrame) -> pd.DataFrame:
         from .wand import topk_shard
 
-        idf = dict(zip(pdf["term"], pdf["idf"]))
-        weights = {t: qtf_map[t] * v for t, v in idf.items()}
         # k = full match set: every group's champion must survive
         ids, sc = topk_shard(
             pdf, weights, avgdl, 1 << 62, prune=False, drop_ids=tomb
         )
         return pd.DataFrame({"doc_id": ids, "score": sc})
 
-    scored = blocks.groupBy("shard").applyInPandas(
-        shard_kernel, "doc_id long, score double"
-    )
+    scored = reader.postings().where(F.col("term").isin(sorted(weights))).groupBy(
+        "shard"
+    ).applyInPandas(shard_kernel, "doc_id long, score double")
     # group-key fetch: INNER join, so AQE broadcasts the (match-set-
     # sized) scored side and doc_stats stays a streamed two-column
     # pruned scan — no corpus-sized exchange (the LEFT-outer metadata

@@ -28,12 +28,17 @@ same with three exact, query-sized artifacts:
   double-count, same as it would corrupt a physical merge);
 - each generation's block-max kernel scores with the global avgdl,
   its stored bounds loosened by max(1, avgdl_g/avgdl_built) so
-  θ-pruning stays rank-safe (proof in engine/wand.py topk_shard).
+  θ-pruning stays rank-safe (proof in engine/wand.py topk_terms).
 
-Plan shape: per generation the standard isin-pruned posting scan +
-per-shard applyInPandas kernel (no new shuffle class), one union of
-size-k-per-shard frames, one global TakeOrderedAndProject. Cost is
-additive in generations; nothing corpus-sized moves.
+The global weights are computed once, in the driver: each generation's
+pyarrow dictionary read (IndexReader._term_stats) gives its dfs, and
+idf_py at the global N turns their sums into the weights every
+generation's kernel closes over — the same floats the single-index
+paths sum. Plan shape: per generation the standard isin-pruned posting
+scan + per-shard applyInPandas kernel (IndexReader._shard_topk; no
+dictionary scan, no new shuffle class), one union of size-k-per-shard
+frames, one global TakeOrderedAndProject. Cost is additive in
+generations; nothing corpus-sized moves.
 
 Tombstones compose per generation: each reader's own drop-mask rides
 into its kernel, while statistics stay stale until compaction —
@@ -46,11 +51,11 @@ from collections import Counter
 from dataclasses import dataclass, field
 from functools import reduce
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .index import IndexReader
-from .query import idf_col
+from .index import IndexReader, _ranked_cut
+from .query import idf_py
 from .tokenizer import tokenize
 
 
@@ -92,27 +97,6 @@ class FederatedReader:
             dl_sum += s.get("dl_sum", round(s["avgdl"] * s["n_docs"]))
         return n, (dl_sum / n) if n else 0.0
 
-    def _global_idf_frame(self, terms: list[str], n: int) -> DataFrame:
-        """(term, idf) with df summed across generations. Query-sized:
-        every per-generation dictionary read is an isin-pushed scan of
-        ≤ |terms| rows; the aggregate and the downstream broadcast
-        carry at most |terms| rows."""
-        dics = [
-            r.dictionary()
-            .where(F.col("term").isin(terms))
-            .select("term", F.col("df").cast("long").alias("df"))
-            for r in self.readers
-        ]
-        return (
-            reduce(DataFrame.unionByName, dics)
-            .groupBy("term")
-            .agg(F.sum("df").alias("df"))
-            .select(
-                "term",
-                idf_col(F.col("df").cast("double"), F.lit(float(n))).alias("idf"),
-            )
-        )
-
     # ------------------------------------------------------- serving
     def bm25_topk(
         self, query: str, k: int = 10, *, prune: bool = True,
@@ -124,34 +108,24 @@ class FederatedReader:
         `federated_topk` runs against the ordinary full-corpus BM25
         oracle)."""
         qtf = Counter(tokenize(query, use_stem=self.use_stem))
-        qtf_map = {t: float(c) for t, c in qtf.items()}
-        if not qtf_map:
+        dfs = Counter()
+        for r in self.readers:
+            dfs.update({t: df for t, (df, _) in r._term_stats(qtf).items()})
+        if not dfs:
             return self.spark.createDataFrame(
                 [], "rank int, doc_id long, score double"
             )
         n, avgdl_g = self.global_stats()
-        idf = self._global_idf_frame(list(qtf_map), n)
-        eps = 0.5 * 10.0 ** (-round_scores) if round_scores is not None else 0.0
+        weights = {"": {t: qtf[t] * idf_py(float(df), float(n)) for t, df in dfs.items()}}
         parts = []
         for r in self.readers:
             avgdl_b = r.manifest["stats"]["avgdl"]
             scale = max(1.0, avgdl_g / avgdl_b) if avgdl_b > 0 else 1.0
-            parts.append(
-                r._qtf_shard_scores(
-                    qtf_map, k, prune=prune, eps=eps,
-                    idf_frame=idf, avgdl=avgdl_g, bound_scale=scale,
-                )
-            )
-        per_shard = reduce(DataFrame.unionByName, parts)
-        if round_scores is not None:
-            per_shard = per_shard.select(
-                "doc_id", F.round("score", round_scores).alias("score")
-            )
-        topk = per_shard.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
-        w = Window.orderBy(F.desc("score"), F.asc("doc_id"))
-        return topk.withColumn("rank", F.row_number().over(w)).select(
-            "rank", "doc_id", "score"
-        )
+            parts.append(r._shard_topk(
+                weights, k, avgdl=avgdl_g, bound_scale=scale,
+                **r._kernel_kw(prune, round_scores),
+            ))
+        return _ranked_cut(reduce(DataFrame.unionByName, parts), k, round_scores)
 
     def hit_counts(self, queries: dict[str, str]) -> DataFrame:
         """(query_id, n_hits) across all generations. Disjoint doc sets

@@ -41,13 +41,13 @@ from pyspark.sql import functions as F
 from .build import dictionary_df, doc_tokens_df, explode_doc_tokens
 from .packaging import ensure_importable
 from .postings import BLOCK_DOCS, BLOCKS_SCHEMA, blocks_batches_for_partition
-from .query import idf_col, idf_py, round_half_up
+from .query import idf_py, round_half_up
 from .tokenizer import tokenize
 
 MANIFEST = "manifest.json"
 
 # IndexReader._qtf_topk serves a query in the driver process (pyarrow
-# pruned read + engine.wand.topk_shard per shard, no Spark job) when
+# pruned read + engine.wand.topk_terms per shard, no Spark job) when
 # the query terms' Σ n_blocks (dictionary) is at or below this bound,
 # and through the per-shard applyInPandas job above it. Measured with
 # bm25_topk(q, 10, with_metadata=True), gen_corpus(48 000 docs), 16
@@ -102,6 +102,26 @@ def _final_cut(hits, k: int, round_scores: int | None,
         ids, sc = ids[keep], sc[keep]
     order = np.lexsort((ids, -sc))[:k]
     return ids[order], sc[order]
+
+
+def _ranked_cut(frame: DataFrame, k: int, round_scores: int | None,
+                after: tuple[float, int] | None = None) -> DataFrame:
+    """Rows with doc_id and score → the global top-k (rank, doc_id, score):
+    HALF_UP rounding (F.round), the exact rounded-key cursor filter,
+    then the (score DESC, doc_id ASC) TakeOrderedAndProject and its
+    ranks — the Spark twin of _final_cut. A doc lives in exactly one
+    shard, so per-shard scores are complete finals: rounding here rounds
+    the final score and makes the rounded value the global sort key."""
+    from .ranking import _ranked
+
+    if round_scores is not None:
+        frame = frame.select("doc_id", F.round("score", round_scores).alias("score"))
+    if after is not None:
+        s_a, d_a = after
+        frame = frame.where(
+            (F.col("score") < s_a) | ((F.col("score") == s_a) & (F.col("doc_id") > d_a))
+        )
+    return _ranked(frame, "score", k)
 
 
 def _batch_table(hits, rank: bool = False):
@@ -790,7 +810,7 @@ class IndexReader:
                 self._tomb_np = np.empty(0, dtype=np.int64)
             else:
                 # pyarrow, not a Spark collect: the driver-served query
-                # path (_local_topk) launches no Spark job at all
+                # path (_topk_hits) launches no Spark job at all
                 ids = self._arrow("tombstones").to_table(columns=["doc_id"])
                 self._tomb_np = np.sort(
                     ids.column("doc_id").to_numpy().astype(np.int64)
@@ -1366,20 +1386,29 @@ class IndexReader:
             "rank", "doc_id", "cos"
         )
 
+    def _weights(self, qtfs: dict) -> tuple[dict, dict[str, tuple[int, int]]]:
+        """{qid: {term: qtf}} → ({qid: {term: qtf·idf}} over each
+        query's in-vocabulary terms, {term: (df, n_blocks)} of their
+        union). The one source of BM25 query weights: a single pyarrow
+        dictionary read (_term_stats) and idf_py, whose floats every
+        kernel — driver-served or closed over by an applyInPandas job —
+        sums, so no path computes its own idf."""
+        stats = self._term_stats({t for qtf in qtfs.values() for t in qtf})
+        n = float(self.manifest["stats"]["n_docs"])
+        idf = {t: idf_py(float(df), n) for t, (df, _) in stats.items()}
+        weights = {
+            qid: {t: c * idf[t] for t, c in qtf.items() if t in idf}
+            for qid, qtf in qtfs.items()
+        }
+        return weights, stats
+
     def query_weights(self, query: str) -> dict[str, float]:
-        """term → qtf * idf for the query's terms (tiny driver-side
-        dict; the dictionary lookup is the pyarrow isin read the
-        driver-served query path uses — no Spark job)."""
+        """term → qtf * idf for the query's in-vocabulary terms (the
+        one-query view of _weights — no Spark job)."""
         from collections import Counter
 
         qtf = Counter(tokenize(query, use_stem=self.use_stem))
-        if not qtf:
-            return {}
-        n = float(self.manifest["stats"]["n_docs"])
-        return {
-            t: qtf[t] * idf_py(float(df), n)
-            for t, (df, _) in self._term_stats(qtf).items()
-        }
+        return self._weights({"": qtf})[0][""]
 
     def bm25_topk_batch(
         self, queries: dict[str, str], k: int = 10, *, prune: bool = True,
@@ -1388,88 +1417,37 @@ class IndexReader:
         """Top-k of every query of a batch → (query_id, rank, doc_id,
         score); queries with no in-vocabulary term are omitted.
 
-        One pyarrow dictionary read gives df (→ idf_py) and n_blocks for
-        the union of the batch's terms. Each shard's blocks of that
-        union become TermBlocks once (engine/wand.py: every block
-        decoded at most once, shared by all queries of the batch) and
+        _weights gives every query's weights and the union's n_blocks;
+        _topk_hits serves the batch — each shard's blocks of the union
+        become TermBlocks once (engine/wand.py: every block decoded at
+        most once, shared by all queries of the batch) and
         wand.topk_terms scores every query against them (SURVEY.md
-        §3.3 batch evaluation). A batch whose union and per-query
-        posting mass are both small (LOCAL_BATCH_MASS_FACTOR) is served
-        in the driver process with no Spark job; otherwise the same
-        per-shard kernel runs in one applyInPandas
-        over the isin-pruned postings, followed by a per-query window
-        rank. Both paths apply the same rules: HALF_UP rounding of each
-        shard's finals, then the (score DESC, doc_id ASC) k-cut."""
-        import pandas as pd
-
+        §3.3 batch evaluation), in the driver process with no Spark job
+        when the batch is small (the _topk_hits rule), otherwise in one
+        applyInPandas over the isin-pruned postings followed by a
+        per-query window rank. Both paths apply the same rules: HALF_UP
+        rounding of each shard's finals, then the (score DESC, doc_id
+        ASC) k-cut."""
         from collections import Counter
 
-        from .wand import term_blocks, topk_terms
-
-        qtfs = {
+        weights, stats = self._weights({
             qid: Counter(tokenize(q, use_stem=self.use_stem))
             for qid, q in queries.items()
-        }
-        stats = self._term_stats({t for c in qtfs.values() for t in c})
-        n = float(self.manifest["stats"]["n_docs"])
-        idf = {t: idf_py(float(df), n) for t, (df, _) in stats.items()}
-        weights = {
-            qid: {t: c * idf[t] for t, c in qtf.items() if t in idf}
-            for qid, qtf in qtfs.items()
-        }
-        weights = {qid: w for qid, w in weights.items() if w}
-        avgdl = self.manifest["stats"]["avgdl"]
-        # rounded sort keys need eps-relaxed pruning: a doc within half a
-        # rounding step below θ can tie the k-th rounded key downstream
-        eps = 0.5 * 10.0 ** (-round_scores) if round_scores is not None else 0.0
-        tomb = self._tomb_array()
-        kw = dict(prune=prune, eps=eps, drop_ids=tomb if tomb.size else None)
+        })
+        hits = self._topk_hits(weights, stats, k, prune=prune, round_scores=round_scores)
         schema = "query_id string, rank int, doc_id long, score double"
-
-        # dispatch rule: LOCAL_BATCH_MASS_FACTOR. A batch with no
-        # in-vocabulary term is answered without a job at any bound, as
-        # in _qtf_topk
-        union = sum(nb for _, nb in stats.values())
-        mass = sum(stats[t][1] for w in weights.values() for t in w)
-        if not stats or (
-            union <= LOCAL_SERVE_MAX_BLOCKS
-            and mass <= LOCAL_BATCH_MASS_FACTOR * LOCAL_SERVE_MAX_BLOCKS
-        ):
-            self.local_served += 1
-            hits = {qid: [] for qid in weights}
-            for _, g in self._local_blocks(stats):
-                postings = term_blocks(g, avgdl)
-                for qid, w in weights.items():
-                    hits[qid].append(topk_terms(postings, w, k, **kw))
-            cut = {qid: _final_cut(h, k, round_scores) for qid, h in sorted(hits.items())}
-            return self.spark.createDataFrame(_batch_table(cut, rank=True), schema)
-        self.spark_served += 1
-
-        def shard_kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-            postings = term_blocks(pdf, avgdl)
-            return _batch_table({
-                qid: topk_terms(postings, w, k, **kw) for qid, w in weights.items()
-            }).to_pandas()
-
-        per_shard = (
-            self.postings().where(F.col("term").isin(sorted(stats)))
-            .groupBy("shard").applyInPandas(
-                shard_kernel, "query_id string, doc_id long, score double"
-            )
-        )
+        if not isinstance(hits, DataFrame):
+            return self.spark.createDataFrame(_batch_table(hits, rank=True), schema)
         if round_scores is not None:
-            # a doc lives in exactly one shard, so per-shard scores are
-            # complete finals — rounding here rounds the final score and
-            # makes the rounded value the global sort key (cross-engine
-            # float discipline, engine/driver_queries.py)
-            per_shard = per_shard.select(
+            # per-shard scores are complete finals (_ranked_cut)
+            hits = hits.select(
                 "query_id", "doc_id", F.round("score", round_scores).alias("score")
             )
         w = Window.partitionBy("query_id").orderBy(
             F.desc("score"), F.asc("doc_id")
         )
         return (
-            per_shard.withColumn("rank", F.row_number().over(w))
+            hits.withColumn("rank", F.row_number().over(w))
             .where(F.col("rank") <= k)
             .select("query_id", "rank", "doc_id", "score")
         )
@@ -1486,12 +1464,11 @@ class IndexReader:
         float discipline of the DuckDB-checked driver entries.
 
         Served by _qtf_topk: a pyarrow read of the query terms'
-        dictionary rows (df → idf, n_blocks) picks the path. Small
-        posting masses (Σ n_blocks ≤ LOCAL_SERVE_MAX_BLOCKS) run the
-        kernel in the driver process and launch no Spark job; larger
-        ones run it per shard in applyInPandas, where the idf lookup
-        rides inside the scoring job as a broadcast join of the
-        isin-pruned dictionary onto the blocks."""
+        dictionary rows (df → idf_py weights, n_blocks) picks the path.
+        Small posting masses (Σ n_blocks ≤ LOCAL_SERVE_MAX_BLOCKS) run
+        the kernel in the driver process and launch no Spark job;
+        larger ones run it per shard in applyInPandas, with the same
+        weights closed over by the kernel."""
         from collections import Counter
 
         qtf = Counter(tokenize(query, use_stem=self.use_stem))
@@ -1630,15 +1607,7 @@ class IndexReader:
                 count_kernel, "doc_id long"
             )
             bm = bm.join(keep, "doc_id")
-        if round_scores is not None:
-            bm = bm.select(
-                "doc_id", F.round("score", round_scores).alias("score")
-            )
-        topk = bm.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
-        w = Window.orderBy(F.desc("score"), F.asc("doc_id"))
-        return topk.withColumn("rank", F.row_number().over(w)).select(
-            "rank", "doc_id", "score"
-        )
+        return _ranked_cut(bm, k, round_scores)
 
     def boosting_topk(
         self, positive: str, negative: str, k: int = 10, *,
@@ -1747,15 +1716,7 @@ class IndexReader:
                     .otherwise(F.lit(1.0))
                 ).alias("score"),
             )
-        if round_scores is not None:
-            bm = bm.select(
-                "doc_id", F.round("score", round_scores).alias("score")
-            )
-        topk = bm.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
-        w = Window.orderBy(F.desc("score"), F.asc("doc_id"))
-        return topk.withColumn("rank", F.row_number().over(w)).select(
-            "rank", "doc_id", "score"
-        )
+        return _ranked_cut(bm, k, round_scores)
 
     def doc_tokens(self) -> DataFrame:
         """The stage-1 array-form tokens checkpoint (doc_id, terms[],
@@ -1912,27 +1873,13 @@ class IndexReader:
 
         from collections import Counter
 
-        spark = self.spark
-        qtf_map = {
-            t: float(c)
-            for t, c in Counter(tokenize(query, use_stem=self.use_stem)).items()
-        }
-        if not qtf_map:
-            return spark.createDataFrame([], "rank int, doc_id long, score double")
+        qtf = Counter(tokenize(query, use_stem=self.use_stem))
+        weights = self._weights({"": qtf})[0][""]
+        if not weights:
+            return self.spark.createDataFrame([], "rank int, doc_id long, score double")
         avgdl = self.manifest["stats"]["avgdl"]
-        n = self.manifest["stats"]["n_docs"]
         n_shards = self.manifest["config"]["n_shards"]
-        dic = (
-            self.dictionary()
-            .where(F.col("term").isin(list(qtf_map)))
-            .select(
-                "term",
-                idf_col(F.col("df").cast("double"), F.lit(float(n))).alias("idf"),
-            )
-        )
-        blocks = self.postings().where(F.col("term").isin(list(qtf_map))).join(
-            F.broadcast(dic), "term"
-        )
+        blocks = self.postings().where(F.col("term").isin(sorted(weights)))
         keep = self.doc_stats()
         if repo is not None:
             keep = keep.where(F.col("repo") == repo)
@@ -1942,9 +1889,7 @@ class IndexReader:
             "doc_id",
             F.pmod(F.xxhash64("doc_id"), F.lit(n_shards)).cast("int").alias("shard"),
         )
-        eps = 0.5 * 10.0 ** (-round_scores) if round_scores is not None else 0.0
-        tomb = self._tomb_array()
-        tomb = tomb if tomb.size else None
+        kw = self._kernel_kw(prune, round_scores)
 
         def shard_kernel(bl: pd.DataFrame, kp: pd.DataFrame) -> pd.DataFrame:
             import numpy as np
@@ -1952,12 +1897,7 @@ class IndexReader:
             from .wand import topk_shard
 
             keep_ids = np.sort(kp["doc_id"].to_numpy(dtype=np.int64))
-            idf = dict(zip(bl["term"], bl["idf"]))
-            weights = {t: qtf_map[t] * v for t, v in idf.items()}
-            ids, sc = topk_shard(
-                bl, weights, avgdl, k, prune=prune, eps=eps,
-                drop_ids=tomb, keep_ids=keep_ids,
-            )
+            ids, sc = topk_shard(bl, weights, avgdl, k, keep_ids=keep_ids, **kw)
             return pd.DataFrame({"doc_id": ids, "score": sc})
 
         per_shard = (
@@ -1965,15 +1905,7 @@ class IndexReader:
             .cogroup(keep.groupBy("shard"))
             .applyInPandas(shard_kernel, "doc_id long, score double")
         )
-        if round_scores is not None:
-            per_shard = per_shard.select(
-                "doc_id", F.round("score", round_scores).alias("score")
-            )
-        topk = per_shard.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
-        w = Window.orderBy(F.desc("score"), F.asc("doc_id"))
-        return topk.withColumn("rank", F.row_number().over(w)).select(
-            "rank", "doc_id", "score"
-        )
+        return _ranked_cut(per_shard, k, round_scores)
 
     def bm25_topk_paged(
         self, query: str, k: int = 10, offset: int = 0, *,
@@ -2288,21 +2220,10 @@ class IndexReader:
 
         # -- masked block-max scoring (the filtered_topk mechanism) ----
         avgdl = self.manifest["stats"]["avgdl"]
-        n = self.manifest["stats"]["n_docs"]
-        dic = (
-            self.dictionary()
-            .where(F.col("term").isin(list(qtf_map)))
-            .select(
-                "term",
-                idf_col(F.col("df").cast("double"), F.lit(float(n))).alias("idf"),
-            )
-        )
-        blocks = self.postings().where(
-            F.col("term").isin(list(qtf_map))
-        ).join(F.broadcast(dic), "term")
-        eps = 0.5 * 10.0 ** (-round_scores) if round_scores is not None else 0.0
-        tomb = self._tomb_array()
-        tomb = tomb if tomb.size else None
+        weights = self._weights({"": qtf_map})[0][""]
+        blocks = self.postings().where(F.col("term").isin(sorted(weights)))
+        kw = self._kernel_kw(prune, round_scores)
+        tomb = kw.pop("drop_ids")
 
         def shard_kernel(bl: pd.DataFrame, ax: pd.DataFrame) -> pd.DataFrame:
             import numpy as np
@@ -2317,11 +2238,8 @@ class IndexReader:
             if tomb is not None:
                 drop = np.concatenate([drop, tomb])
             drop_ids = np.unique(drop) if drop.size else None
-            idf = dict(zip(bl["term"], bl["idf"]))
-            weights = {t: qtf_map[t] * v for t, v in idf.items()}
             ids, sc = topk_shard(
-                bl, weights, avgdl, k, prune=prune, eps=eps,
-                drop_ids=drop_ids, keep_ids=keep_ids,
+                bl, weights, avgdl, k, drop_ids=drop_ids, keep_ids=keep_ids, **kw
             )
             return pd.DataFrame({"doc_id": ids, "score": sc})
 
@@ -2330,72 +2248,7 @@ class IndexReader:
             .cogroup(aux.groupBy("shard"))
             .applyInPandas(shard_kernel, "doc_id long, score double")
         )
-        if round_scores is not None:
-            per_shard = per_shard.select(
-                "doc_id", F.round("score", round_scores).alias("score")
-            )
-        topk = per_shard.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
-        w = Window.orderBy(F.desc("score"), F.asc("doc_id"))
-        return topk.withColumn("rank", F.row_number().over(w)).select(
-            "rank", "doc_id", "score"
-        )
-
-    def _qtf_shard_scores(
-        self, qtf_map: dict[str, float], k: int, *, prune: bool = True,
-        eps: float = 0.0, exclude_ids: list[int] | None = None,
-        after: tuple[float, int] | None = None,
-        idf_frame: DataFrame | None = None, avgdl: float | None = None,
-        bound_scale: float = 1.0,
-    ) -> DataFrame:
-        """Per-shard block-max scoring → unrounded (doc_id, score) of
-        each shard's local top-k. The shared physical body under
-        _qtf_topk AND federated serving (engine/federated.py): the
-        latter passes GLOBAL statistics — ``idf_frame`` (term, idf)
-        built from the summed cross-generation dfs, the
-        length-weighted global ``avgdl``, and ``bound_scale`` =
-        max(1, avgdl_global / avgdl_built) so this index's stored
-        block-max bounds stay upper bounds under the foreign avgdl
-        (engine/wand.py topk_terms docstring for the proof)."""
-        import pandas as pd
-
-        if avgdl is None:
-            avgdl = self.manifest["stats"]["avgdl"]
-        if idf_frame is None:
-            n = self.manifest["stats"]["n_docs"]
-            idf_frame = (
-                self.dictionary()
-                .where(F.col("term").isin(list(qtf_map)))
-                .select(
-                    "term",
-                    idf_col(
-                        F.col("df").cast("double"), F.lit(float(n))
-                    ).alias("idf"),
-                )
-            )
-        blocks = self.postings().where(F.col("term").isin(list(qtf_map))).join(
-            F.broadcast(idf_frame), "term"
-        )
-        tomb = self._tomb_array()
-        if exclude_ids:
-            import numpy as np
-
-            tomb = np.union1d(tomb, np.asarray(exclude_ids, dtype=np.int64))
-        tomb = tomb if tomb.size else None
-
-        def shard_kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-            from .wand import topk_shard
-
-            idf = dict(zip(pdf["term"], pdf["idf"]))
-            weights = {t: qtf_map[t] * v for t, v in idf.items()}
-            ids, sc = topk_shard(
-                pdf, weights, avgdl, k, prune=prune, eps=eps, drop_ids=tomb,
-                after=after, bound_scale=bound_scale,
-            )
-            return pd.DataFrame({"doc_id": ids, "score": sc})
-
-        return blocks.groupBy("shard").applyInPandas(
-            shard_kernel, "doc_id long, score double"
-        )
+        return _ranked_cut(per_shard, k, round_scores)
 
     def _qtf_topk(
         self, qtf_map: dict[str, float], k: int, *, prune: bool = True,
@@ -2404,119 +2257,49 @@ class IndexReader:
         after: tuple[float, int] | None = None,
     ) -> DataFrame:
         """Shared (term → qtf) weighted top-k body for bm25_topk and
-        wildcard_topk — per-shard block-max kernel + global
-        TakeOrderedAndProject. ``exclude_ids`` rides the tombstone
-        drop-mask (more_like_this excludes the source doc this way, so
-        θ-pruning stays rank-safe over the remaining docs). ``after``
-        is the searchAfter cursor (engine/wand.py): the kernel keeps a
-        size-k heap of docs sorting strictly after it, and the exact
-        rounded-key cursor filter is re-applied here on the global
+        wildcard_topk — the one-query batch of _topk_hits, then the
+        global (score DESC, doc_id ASC) cut. ``exclude_ids`` rides the
+        tombstone drop-mask (more_like_this excludes the source doc this
+        way, so θ-pruning stays rank-safe over the remaining docs).
+        ``after`` is the searchAfter cursor (engine/wand.py): the kernel
+        keeps a size-k heap of docs sorting strictly after it, and the
+        exact rounded-key cursor filter is re-applied on the global
         merge (the kernel's eviction is conservative at boundaries).
 
-        Dispatch: one pyarrow dictionary read gives the terms' df and
-        n_blocks; at Σ n_blocks ≤ LOCAL_SERVE_MAX_BLOCKS the query is
-        served in the driver process (_local_topk — same kernel, same
-        arguments, same merge rules, no Spark job), above it through
-        the per-shard applyInPandas job below, the large-mass and
-        reference path."""
-        eps = 0.5 * 10.0 ** (-round_scores) if round_scores is not None else 0.0
-        stats = self._term_stats(qtf_map)
-        # a query with no in-vocabulary term has nothing to score: it is
-        # answered without a job at any bound
-        if not stats or sum(nb for _, nb in stats.values()) <= LOCAL_SERVE_MAX_BLOCKS:
-            self.local_served += 1
-            return self._local_topk(
-                qtf_map, stats, k, prune=prune, eps=eps,
-                round_scores=round_scores, exclude_ids=exclude_ids,
-                after=after, with_metadata=with_metadata,
-            )
-        self.spark_served += 1
-        spark = self.spark
-        per_shard = self._qtf_shard_scores(
-            qtf_map, k, prune=prune, eps=eps, exclude_ids=exclude_ids,
-            after=after,
-        )
-        if round_scores is not None:
-            per_shard = per_shard.select(
-                "doc_id", F.round("score", round_scores).alias("score")
-            )
-        if after is not None:
-            s_a, d_a = after
-            per_shard = per_shard.where(
-                (F.col("score") < s_a)
-                | ((F.col("score") == s_a) & (F.col("doc_id") > d_a))
-            )
-        topk = per_shard.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
-        w = Window.orderBy(F.desc("score"), F.asc("doc_id"))
-        out = topk.withColumn("rank", F.row_number().over(w)).select(
-            "rank", "doc_id", "score"
-        )
-        if with_metadata:
-            # k-row driver cut + isin pushdown (snippet_topk pattern):
-            # a LEFT join keeps the k-row frame on the preserved side,
-            # forcing Spark to broadcast or sort-merge the CORPUS-sized
-            # doc_stats per query. Instead collect the k ids, push them
-            # into the doc_stats parquet scan (row-group pruning via
-            # PushedFilters In(doc_id, ...)), and broadcast the now
-            # k-row meta side.
-            rows = out.collect()
-            small = spark.createDataFrame(rows, out.schema)
-            ids = [r["doc_id"] for r in rows]
-            meta = self.doc_stats().select("doc_id", "repo", "path")
-            meta = (
-                meta.where(F.col("doc_id").isin(ids))
-                if ids
-                else meta.where(F.lit(False))
-            )
-            out = small.join(F.broadcast(meta), "doc_id", "left").orderBy("rank")
-        return out
-
-    def _local_blocks(self, terms):
-        """Driver-side (shard, blocks frame) groups, shard ascending, of
-        ``terms``' posting blocks: one pyarrow read of ``postings/``
-        (hive ``shard=`` partitions, term isin pushed into the scan)."""
-        import pyarrow.compute as pc
-
-        from .postings import BLOCK_COLUMNS
-
-        if not terms:
-            return []
-        return self._arrow("postings").to_table(
-            columns=BLOCK_COLUMNS, filter=pc.field("term").isin(sorted(terms)),
-        ).to_pandas().groupby("shard", sort=True)
-
-    def _local_topk(
-        self, qtf_map: dict[str, float], stats: dict[str, tuple[int, int]],
-        k: int, *, prune: bool, eps: float, round_scores: int | None,
-        exclude_ids: list[int] | None, after: tuple[float, int] | None,
-        with_metadata: bool,
-    ) -> DataFrame:
-        """_qtf_topk served in the driver process: the query terms'
-        posting blocks through one pyarrow read (hive ``shard=``
-        partitions, term isin pushed into the scan), engine.wand.topk_shard
-        per shard with the arguments the Spark shard_kernel passes, then
-        the Spark path's global rules (_final_cut). The
-        result is built from an Arrow table, which plans as a
-        LocalRelation: the caller's collect() launches no job either.
-        Same columns, order and types as the Spark path."""
+        A driver-served result is built from an Arrow table, which plans
+        as a LocalRelation: the caller's collect() launches no job
+        either. Same columns, order and types on both paths."""
         import numpy as np
         import pyarrow as pa
         import pyarrow.compute as pc
 
-        from .wand import topk_shard
-
-        n = float(self.manifest["stats"]["n_docs"])
-        avgdl = self.manifest["stats"]["avgdl"]
-        weights = {t: qtf_map[t] * idf_py(float(df), n) for t, (df, _) in stats.items()}
-        drop = self._tomb_array()
-        if exclude_ids:
-            drop = np.union1d(drop, np.asarray(exclude_ids, dtype=np.int64))
-        hits = [
-            topk_shard(g, weights, avgdl, k, prune=prune, eps=eps,
-                       drop_ids=drop if drop.size else None, after=after)
-            for _, g in self._local_blocks(weights)
-        ]
-        ids, sc = _final_cut(hits, k, round_scores, after)
+        weights, stats = self._weights({"": qtf_map})
+        hits = self._topk_hits(
+            weights, stats, k, prune=prune, round_scores=round_scores,
+            exclude_ids=exclude_ids, after=after,
+        )
+        if isinstance(hits, DataFrame):
+            out = _ranked_cut(hits, k, round_scores, after)
+            if with_metadata:
+                # k-row driver cut + isin pushdown (snippet_topk pattern):
+                # a LEFT join keeps the k-row frame on the preserved side,
+                # forcing Spark to broadcast or sort-merge the CORPUS-sized
+                # doc_stats per query. Instead collect the k ids, push them
+                # into the doc_stats parquet scan (row-group pruning via
+                # PushedFilters In(doc_id, ...)), and broadcast the now
+                # k-row meta side.
+                rows = out.collect()
+                small = self.spark.createDataFrame(rows, out.schema)
+                ids = [r["doc_id"] for r in rows]
+                meta = self.doc_stats().select("doc_id", "repo", "path")
+                meta = (
+                    meta.where(F.col("doc_id").isin(ids))
+                    if ids
+                    else meta.where(F.lit(False))
+                )
+                out = small.join(F.broadcast(meta), "doc_id", "left").orderBy("rank")
+            return out
+        ids, sc = hits[""]
         out = pa.table({
             "rank": pa.array(np.arange(1, ids.size + 1), pa.int32()),
             "doc_id": pa.array(ids, pa.int64()),
@@ -2538,52 +2321,133 @@ class IndexReader:
             schema = "doc_id long, rank int, score double, repo string, path string"
         return self.spark.createDataFrame(out, schema)
 
+    def _kernel_kw(self, prune: bool, round_scores: int | None,
+                   exclude_ids: list[int] | None = None,
+                   after: tuple[float, int] | None = None) -> dict:
+        """The wand kernel arguments every top-k surface shares: the
+        drop mask is tombstones ∪ ``exclude_ids``, and rounded sort keys
+        need eps-relaxed pruning (a doc within half a rounding step
+        below θ can tie the k-th rounded key downstream)."""
+        import numpy as np
+
+        eps = 0.5 * 10.0 ** (-round_scores) if round_scores is not None else 0.0
+        drop = self._tomb_array()
+        if exclude_ids:
+            drop = np.union1d(drop, np.asarray(exclude_ids, dtype=np.int64))
+        return dict(prune=prune, eps=eps, drop_ids=drop if drop.size else None,
+                    after=after)
+
+    def _topk_hits(self, weights: dict, stats: dict, k: int, *, prune: bool,
+                   round_scores: int | None,
+                   exclude_ids: list[int] | None = None,
+                   after: tuple[float, int] | None = None):
+        """The one top-k serving path of bm25_topk_batch and _qtf_topk,
+        for _weights' ({qid: weights}, stats). The one dispatch rule,
+        counted in local_served / spark_served: the driver serves when
+        the union's Σ n_blocks ≤ LOCAL_SERVE_MAX_BLOCKS and the
+        per-query mass Σ_q Σ_{t∈q} n_blocks ≤ LOCAL_BATCH_MASS_FACTOR
+        times that bound (one query: mass = union), and a call with no
+        in-vocabulary term, having nothing to score, at any bound. It
+        reads the union's blocks with pyarrow, builds each shard's
+        TermBlocks once, runs topk_terms per query and applies the
+        global rules (_final_cut) → {qid: (doc_ids, scores)}, sorted by
+        qid. Otherwise → the _shard_topk frame: the same kernel per
+        shard in applyInPandas, unrounded, for the caller's Spark cut."""
+        from .wand import term_blocks, topk_terms
+
+        kw = self._kernel_kw(prune, round_scores, exclude_ids, after)
+        union = sum(nb for _, nb in stats.values())
+        mass = sum(stats[t][1] for w in weights.values() for t in w)
+        if stats and (
+            union > LOCAL_SERVE_MAX_BLOCKS
+            or mass > LOCAL_BATCH_MASS_FACTOR * LOCAL_SERVE_MAX_BLOCKS
+        ):
+            self.spark_served += 1
+            return self._shard_topk(weights, k, **kw)
+        self.local_served += 1
+        avgdl = self.manifest["stats"]["avgdl"]
+        hits = {qid: [] for qid in weights}
+        for _, g in self._local_blocks(stats):
+            postings = term_blocks(g, avgdl)
+            for qid, w in weights.items():
+                hits[qid].append(topk_terms(postings, w, k, **kw))
+        return {qid: _final_cut(h, k, round_scores, after) for qid, h in sorted(hits.items())}
+
+    def _shard_topk(self, weights: dict, k: int, *, avgdl: float | None = None,
+                    bound_scale: float = 1.0, **kw) -> DataFrame:
+        """One applyInPandas over the isin-pruned postings: each shard's
+        TermBlocks are built once and topk_terms scores every query of
+        ``weights`` → unrounded (query_id, doc_id, score) of each
+        shard's local top-k. The Spark branch of _topk_hits, and the
+        per-generation body of federated serving (engine/federated.py),
+        which passes the global ``avgdl`` and ``bound_scale`` =
+        max(1, avgdl_global / avgdl_built) so this index's stored
+        block-max bounds stay upper bounds under the foreign avgdl
+        (proof in the engine/wand.py topk_terms docstring)."""
+        import pandas as pd
+
+        from .wand import term_blocks, topk_terms
+
+        if avgdl is None:
+            avgdl = self.manifest["stats"]["avgdl"]
+
+        def shard_kernel(pdf: pd.DataFrame) -> pd.DataFrame:
+            postings = term_blocks(pdf, avgdl)
+            return _batch_table({
+                qid: topk_terms(postings, w, k, bound_scale=bound_scale, **kw)
+                for qid, w in weights.items()
+            }).to_pandas()
+
+        terms = sorted({t for w in weights.values() for t in w})
+        return self.postings().where(F.col("term").isin(terms)).groupBy(
+            "shard"
+        ).applyInPandas(shard_kernel, "query_id string, doc_id long, score double")
+
+    def _local_blocks(self, terms):
+        """Driver-side (shard, blocks frame) groups, shard ascending, of
+        ``terms``' posting blocks: one pyarrow read of ``postings/``
+        (hive ``shard=`` partitions, term isin pushed into the scan)."""
+        import pyarrow.compute as pc
+
+        from .postings import BLOCK_COLUMNS
+
+        if not terms:
+            return []
+        return self._arrow("postings").to_table(
+            columns=BLOCK_COLUMNS, filter=pc.field("term").isin(sorted(terms)),
+        ).to_pandas().groupby("shard", sort=True)
+
     def bm25_scores_all(self, query: str) -> DataFrame:
         """(doc_id, score) for EVERY doc matching ≥1 query term — the
         exhaustive union scoring over the index (no top-k cut, no
         pruning). Feeds fusion's max-normalization, which needs the full
         score distribution, not just the top-k.
 
-        Like bm25_topk's Spark path, the idf lookup rides inside the
-        scoring job as a broadcast join of the isin-pruned dictionary
-        onto the blocks (VERDICT r2 #8), so a fusion query launches no
-        extra driver job per signal."""
+        Like bm25_topk's Spark path, the kernel closes over the query
+        weights from one pyarrow dictionary read (_weights; no Spark
+        job), so a fusion query launches no extra driver job per
+        signal."""
         import pandas as pd
 
         from collections import Counter
 
         qtf = Counter(tokenize(query, use_stem=self.use_stem))
-        avgdl = self.manifest["stats"]["avgdl"]
-        if not qtf:
+        weights = self._weights({"": qtf})[0][""]
+        if not weights:
             return self.spark.createDataFrame([], "doc_id long, score double")
-        n = self.manifest["stats"]["n_docs"]
-        qtf_map = {t: float(c) for t, c in qtf.items()}
-        dic = (
-            self.dictionary()
-            .where(F.col("term").isin(list(qtf)))
-            .select(
-                "term",
-                idf_col(F.col("df").cast("double"), F.lit(float(n))).alias("idf"),
-            )
-        )
-        blocks = self.postings().where(F.col("term").isin(list(qtf))).join(
-            F.broadcast(dic), "term"
-        )
+        avgdl = self.manifest["stats"]["avgdl"]
 
         def shard_kernel(pdf: pd.DataFrame) -> pd.DataFrame:
             from .wand import topk_shard
 
-            weights = {
-                t: qtf_map[t] * v for t, v in zip(pdf["term"], pdf["idf"])
-            }
             # k = "everything": theta never becomes finite, so the OR
             # phase runs to completion and no accumulator doc is cut
             ids, sc = topk_shard(pdf, weights, avgdl, 1 << 31, prune=False)
             return pd.DataFrame({"doc_id": ids, "score": sc})
 
-        return blocks.groupBy("shard").applyInPandas(
-            shard_kernel, "doc_id long, score double"
-        )
+        return self.postings().where(F.col("term").isin(sorted(weights))).groupBy(
+            "shard"
+        ).applyInPandas(shard_kernel, "doc_id long, score double")
 
     def _body_scores_once(self, query: str) -> DataFrame:
         """bm25_scores_all behind a lazy localCheckpoint: the exhaustive
@@ -2727,24 +2591,13 @@ class IndexReader:
         import pandas as pd
 
         avgdl = self.manifest["stats"]["avgdl"]
-        n = self.manifest["stats"]["n_docs"]
-        dic = (
-            self.dictionary()
-            .where(F.col("term").isin(list(qtf_map)))
-            .select(
-                "term",
-                idf_col(F.col("df").cast("double"), F.lit(float(n))).alias("idf"),
-            )
-        )
-        blocks = self.postings().where(F.col("term").isin(list(qtf_map))).join(
-            F.broadcast(dic), "term"
-        )
+        weights = self._weights({"": qtf_map})[0][""]
+        blocks = self.postings().where(F.col("term").isin(sorted(weights)))
         keep = keep_ids if keep_ids is not None and keep_ids.size else None
 
         def kern(pdf: pd.DataFrame) -> pd.DataFrame:
             from .wand import term_blocks, topk_terms
 
-            weights = {t: qtf_map[t] * v for t, v in zip(pdf["term"], pdf["idf"])}
             postings = term_blocks(pdf, avgdl)  # both passes share the decodes
             out = []
             if with_topk:

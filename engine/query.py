@@ -46,9 +46,9 @@ def idf_py(df: float, n: float) -> float:
     """Scalar twin of :func:`idf_col`, bit-identical to the Spark column
     (tests/test_local_serving.py checks a grid of df values): the same
     IEEE double ops, then :func:`strict_log` where Spark calls
-    ``StrictMath.log``. Driver-side serving (IndexReader._local_topk,
-    query_weights) computes idf with this, so its scores equal the
-    Spark path's to the last bit."""
+    ``StrictMath.log``. IndexReader._weights computes every posting
+    kernel's query weights with this, driver-served or in Spark, so
+    each scores with the same floats as the column-built formulas."""
     return strict_log(1.0 + (n - df + 0.5) / (df + 0.5))
 
 

@@ -70,15 +70,26 @@ def _scored(reader, queries):
     return out
 
 
-def test_idf_py_matches_idf_col(spark):
+def test_idf_py_matches_idf_col(spark, readers, tiny_corpus):
     """The scalar idf is bit-identical to the Spark column over a grid
     of df values (Python's math.log is not: it differs by one ulp on
-    ~5% of them)."""
+    ~5% of them). Every posting kernel scores with idf_py, so the grid
+    also covers the N of each fixture index, the federated global N
+    (tests/test_federated.py: the sum of its doc_id % 3 generations)
+    and a seeded random set of (N, df) up to N = 10⁹."""
+    gens = [r["n"] for r in tiny_corpus.groupBy((F.col("doc_id") % 3).alias("g"))
+            .agg(F.count("*").alias("n")).collect()]
+    fixture_ns = {r.manifest["stats"]["n_docs"] for r in readers} | set(gens) | {sum(gens)}
     grid = []
-    for n in (1, 3, 7, 200, 5000, 48000, 1_200_000):
+    for n in sorted({1, 3, 7, 200, 5000, 48000, 1_200_000} | fixture_ns):
         dfs = set(range(1, min(n, 600) + 1))
         dfs |= set(np.unique(np.geomspace(1, n, 200).astype(np.int64)).tolist())
         grid += [(float(n), float(df)) for df in sorted(dfs)]
+    # N log-uniform in [1, 10⁹], df log-uniform in [1, N]
+    rng = np.random.default_rng(1009)
+    ns = np.exp(rng.uniform(0.0, np.log(1e9), 4000))
+    dfs = np.exp(rng.uniform(0.0, 1.0, 4000) * np.log(ns))
+    grid += [(float(n), float(df)) for n, df in zip(np.floor(ns), np.floor(dfs))]
     rows = spark.createDataFrame(grid, "n double, df double").select(
         "n", "df", idf_col(F.col("df"), F.col("n")).alias("idf")
     ).collect()
@@ -210,14 +221,23 @@ def _batch(monkeypatch, reader, qmap, k=K, **kw):
 @pytest.mark.parametrize("round_scores", [None, 6])
 def test_batch_parity(monkeypatch, readers, queries, prune, round_scores):
     """The driver-served batch equals the applyInPandas batch bit for
-    bit; an all-OOV query is omitted on both paths."""
+    bit, and each query's rows equal its one-query bm25_topk; an
+    all-OOV query is omitted on both paths."""
     reader, _ = readers
-    qmap = {f"q{i:02d}": q["text"] for i, q in enumerate(_scored(reader, queries))}
-    qmap["oov"] = BATCH_OOV
+    scored = {f"q{i:02d}": q["text"] for i, q in enumerate(_scored(reader, queries))}
+    qmap = {**scored, "oov": BATCH_OOV}
     local, remote = _batch(monkeypatch, reader, qmap, prune=prune,
                            round_scores=round_scores)
     assert local == remote
     assert {row[0] for row in local} == set(qmap) - {"oov"}
+    # each scored query's batch rows are its one-query bm25_topk on both paths
+    for qid, text in scored.items():
+        one_local, one_remote = both(
+            monkeypatch, reader,
+            lambda r: r.bm25_topk(text, K, prune=prune, round_scores=round_scores),
+        )
+        mine = [row[1:] for row in local if row[0] == qid]
+        assert one_local == mine == one_remote, qid
 
 
 def test_batch_parity_tombstones_and_k_beyond_matches(monkeypatch, readers, queries):

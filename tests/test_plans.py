@@ -119,19 +119,55 @@ def test_local_path_reads_only_query_blocks(spark, index_dir, monkeypatch):
     r = IndexReader(spark, index_dir)
     terms = _two_index_terms(r)
     seen = []
-    kernel = engine.wand.topk_shard
+    build = engine.wand.term_blocks
 
     def counting(blocks, *a, **kw):
         seen.append(blocks[["term", "shard", "block_id"]])
-        return kernel(blocks, *a, **kw)
+        return build(blocks, *a, **kw)
 
-    monkeypatch.setattr(engine.wand, "topk_shard", counting)
+    monkeypatch.setattr(engine.wand, "term_blocks", counting)
     assert r.bm25_topk(" ".join(terms), 10).count() == 10
     assert r.local_served == 1 and r.spark_served == 0
     want = r.dictionary().where(F.col("term").isin(terms)).agg(F.sum("n_blocks")).first()[0]
     read = sum(len(b) for b in seen)
     assert read == want > 0
     assert set().union(*(set(b["term"]) for b in seen)) == set(terms)
+
+
+def _scans(p: str) -> dict[str, list[str]]:
+    """Formatted plan → {artifact dir: [its Scan parquet sections]}."""
+    out: dict[str, list[str]] = {}
+    for sec in p.split("\n\n"):
+        loc = [ln for ln in sec.splitlines() if ln.startswith("Location:")]
+        if "Scan parquet" in sec and loc:
+            name = loc[0].rstrip("]").rstrip("/").rsplit("/", 1)[-1]
+            out.setdefault(name, []).append(sec)
+    return out
+
+
+def test_spark_scoring_plans_scan_no_dictionary(spark, index_dir, monkeypatch):
+    """Every posting kernel closes over driver-computed weights
+    (IndexReader._weights): the Spark-served scoring plans read no
+    dictionary file, and the term isin still prunes the postings scan."""
+    import engine.index
+    from engine.federated import FederatedReader
+    from engine.index import IndexReader
+
+    monkeypatch.setattr(engine.index, "LOCAL_SERVE_MAX_BLOCKS", 0)
+    r = IndexReader(spark, index_dir)
+    q = " ".join(_two_index_terms(r))
+    frames = {
+        "bm25_topk": r.bm25_topk(q, 10),
+        "filtered_topk": r.filtered_topk(q, 10, path_prefix="src/"),
+        "bm25_scores_all": r.bm25_scores_all(q),
+        "federated": FederatedReader(spark, [index_dir]).bm25_topk(q, 10),
+    }
+    assert r.spark_served == 1
+    for name, df in frames.items():
+        scans = _scans(plan_of(df))
+        assert "dictionary" not in scans, (name, scans)
+        assert scans.get("postings"), (name, scans)
+        assert all("In(term" in sec for sec in scans["postings"]), (name, scans)
 
 def test_stage2_block_build_is_shuffle_free(spark, index_dir):
     """The chunk-stage plan (file-per-partition read of the sharded
