@@ -1218,27 +1218,21 @@ def top_hits_from_index(
     def tf_kernel(pdf: pd.DataFrame) -> pd.DataFrame:
         import numpy as np
 
-        from .postings import decode_block
+        from .postings import decode_terms, isin_sorted
 
-        ids_all, tfs_all = [], []
-        for row in pdf.itertuples(index=False):
-            ids, tfs, _ = decode_block(row)
-            if ids.size:
-                ids_all.append(ids)
-                tfs_all.append(tfs)
-        if not ids_all:
+        runs = decode_terms(pdf)
+        if not runs:
             return pd.DataFrame({"doc_id": [], "tf_sum": []}).astype(
                 {"doc_id": "int64", "tf_sum": "int64"}
             )
-        ids = np.concatenate(ids_all)
-        tfs = np.concatenate(tfs_all).astype(np.int64)
+        ids = np.concatenate([r[0] for r in runs.values()])
+        tfs = np.concatenate([r[1] for r in runs.values()])
         uid, inv = np.unique(ids, return_inverse=True)
         acc = np.zeros(uid.size, dtype=np.int64)
         np.add.at(acc, inv, tfs)
         drop = tomb_b.value
         if drop is not None:
-            pos = np.minimum(np.searchsorted(drop, uid), drop.size - 1)
-            live = drop[pos] != uid
+            live = ~isin_sorted(uid, drop)
             uid, acc = uid[live], acc[live]
         return pd.DataFrame({"doc_id": uid, "tf_sum": acc})
 
@@ -1296,11 +1290,9 @@ def adjacency_matrix_from_index(reader, named: dict[str, str]) -> DataFrame:
     def adj_kernel(pdf: pd.DataFrame) -> pd.DataFrame:
         import numpy as np
 
-        from .boolean import _decode_term_docs
+        from .postings import decode_terms, isin_sorted
 
-        runs = {
-            t: _decode_term_docs(grp) for t, grp in pdf.groupby("term")
-        }
+        runs = {t: r[0] for t, r in decode_terms(pdf).items()}
         drop = tomb_b.value
         sets: dict[str, np.ndarray] = {}
         for n, ts in terms_b.value.items():
@@ -1309,8 +1301,7 @@ def adjacency_matrix_from_index(reader, named: dict[str, str]) -> DataFrame:
                 continue
             ids = np.unique(np.concatenate(arrs))
             if drop is not None:
-                pos = np.minimum(np.searchsorted(drop, ids), drop.size - 1)
-                ids = ids[drop[pos] != ids]
+                ids = ids[~isin_sorted(ids, drop)]
             if ids.size:
                 sets[n] = ids
         present = sorted(sets)

@@ -337,31 +337,24 @@ def fielded_topk_from_index(
         return tfc * (k1 + 1.0) / (k1 + tfc)
 
     def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        from .postings import decode_block
+        from .postings import decode_terms, isin_sorted
 
-        per_term: dict[str, dict[str, list]] = {}
-        for row in pdf.itertuples(index=False):
-            per_term.setdefault(row.term, {"b": [], "t": []})[row.fld].append(
-                decode_block(row)
-            )
+        fld = pdf["fld"].to_numpy()
+        body, title = decode_terms(pdf[fld == "b"]), decode_terms(pdf[fld == "t"])
         acc_ids = np.empty(0, np.int64)
         acc_sc = np.empty(0, np.float64)
         drop = tomb_b.value
-        for t, sides in per_term.items():
+        # terms ascending (decode_terms), so the per-doc sums add in a
+        # fixed order; a shard's body run is doc_id-sorted
+        for t, (ids_b, tfs_b, dls_b) in body.items():
             w_idf = idf_of.get(t)
-            if w_idf is None or not sides["b"]:
+            if w_idf is None:
                 continue
-            ids_b = np.concatenate([x[0] for x in sides["b"]])
-            tfs_b = np.concatenate([x[1] for x in sides["b"]]).astype(np.float64)
-            dls_b = np.concatenate([x[2] for x in sides["b"]]).astype(np.float64)
-            order = np.argsort(ids_b, kind="stable")
-            ids_b, tfs_b, dls_b = ids_b[order], tfs_b[order], dls_b[order]
+            tfs_b, dls_b = tfs_b.astype(np.float64), dls_b.astype(np.float64)
             tf_t = np.zeros(ids_b.size, dtype=np.float64)
             tl_t = np.ones(ids_b.size, dtype=np.float64)  # dummy; masked
-            if sides["t"]:
-                ids_t = np.concatenate([x[0] for x in sides["t"]])
-                tfs_t = np.concatenate([x[1] for x in sides["t"]])
-                tls_t = np.concatenate([x[2] for x in sides["t"]])
+            if t in title:
+                ids_t, tfs_t, tls_t = title[t]
                 pos = np.searchsorted(ids_b, ids_t)
                 pos_c = np.clip(pos, 0, ids_b.size - 1)
                 hit = ids_b[pos_c] == ids_t  # title ⊆ body; guard anyway
@@ -383,8 +376,7 @@ def fielded_topk_from_index(
                     )
                 partial = qtf_of[t] * comb
             if drop is not None:
-                dpos = np.minimum(np.searchsorted(drop, ids_b), drop.size - 1)
-                live = drop[dpos] != ids_b
+                live = ~isin_sorted(ids_b, drop)
                 ids_b, partial = ids_b[live], partial[live]
             both = np.concatenate([acc_ids, ids_b])
             scores = np.concatenate([acc_sc, partial])

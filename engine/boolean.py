@@ -152,26 +152,14 @@ FROM hits ORDER BY score DESC, doc_id ASC LIMIT {k}
 
 # ------------------------------------------------------ index-backed
 
-def _decode_term_docs(grp: pd.DataFrame) -> np.ndarray:
-    """Posting-block rows of ONE (shard, term) → sorted unique doc_ids."""
-    from .codec import delta_decode
-
-    parts = [
-        delta_decode(bytes(r.doc_ids_blob), int(r.n))
-        for r in grp.sort_values("block_id").itertuples()
-    ]
-    return np.concatenate(parts) if parts else np.empty(0, dtype=np.int64)
-
-
 def _boolean_kernel(m_terms: list[str], s_terms: list[str], n_terms: list[str]):
     empty = pd.DataFrame({"doc_id": pd.Series(dtype="int64"),
                           "score": pd.Series(dtype="int64")})
 
     def kernel(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        per = {
-            str(term): _decode_term_docs(grp)
-            for term, grp in pdf.groupby("term")
-        }
+        from .postings import decode_terms
+
+        per = {t: r[0] for t, r in decode_terms(pdf).items()}
         nothing = np.empty(0, dtype=np.int64)
         if m_terms:
             base = per.get(m_terms[0], nothing)

@@ -139,21 +139,16 @@ def explain_from_index(
     blocks = reader.postings().where(F.col("term").isin(list(qtf_map)))
 
     def decode_kernel(it):
-        from .postings import decode_block
+        from .postings import decode_terms, explode_terms, isin_sorted
 
         for pdf in it:
-            for row in pdf.itertuples(index=False):
-                d, tfs, dls = decode_block(row)
-                m = np.isin(d, ids)
-                if not m.any():
-                    continue
+            if not len(pdf):
+                continue
+            terms, d, tfs, dls = explode_terms(decode_terms(pdf))
+            m = isin_sorted(d, ids)
+            if m.any():
                 yield pd.DataFrame(
-                    {
-                        "doc_id": d[m],
-                        "term": row.term,
-                        "tf": tfs[m].astype("int64"),
-                        "dl": dls[m].astype("int64"),
-                    }
+                    {"doc_id": d[m], "term": terms[m], "tf": tfs[m], "dl": dls[m]}
                 )
 
     dec = blocks.mapInPandas(

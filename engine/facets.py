@@ -96,11 +96,9 @@ def match_ids_from_postings(
     def union_kernel(pdf: pd.DataFrame) -> pd.DataFrame:
         import numpy as np
 
-        from .boolean import _decode_term_docs
+        from .postings import decode_terms
 
-        runs = [
-            _decode_term_docs(grp) for _, grp in pdf.groupby("term")
-        ]
+        runs = [r[0] for r in decode_terms(pdf).values()]
         ids = (
             np.unique(np.concatenate(runs))
             if runs

@@ -1307,7 +1307,7 @@ class IndexReader:
         BUILD-TIME doc norms — the recompute-from-corpus path
         (engine/ranking.tfidf_cosine_topk) is the oracle for this.
 
-        Plan: one dictionary scan for (df, idf-weights), one pruned
+        Plan: a pyarrow dictionary read for (df, idf-weights), one pruned
         postings scan; per-shard kernel computes COMPLETE per-doc dot
         products (a doc lives in exactly one shard), then a doc_id join
         against the norms table and TakeOrderedAndProject."""
@@ -1325,13 +1325,7 @@ class IndexReader:
         if not qtf:
             return empty
         n = float(self.manifest["stats"]["n_docs"])
-        dfs = {
-            r["term"]: r["df"]
-            for r in self.dictionary()
-            .where(F.col("term").isin(list(qtf)))
-            .select("term", "df")
-            .collect()
-        }
+        dfs = {t: df for t, (df, _) in self._term_stats(set(qtf)).items()}
         if not dfs:
             return empty
         qw = {
@@ -1348,16 +1342,16 @@ class IndexReader:
         def shard_kernel(pdf: pd.DataFrame) -> pd.DataFrame:
             import numpy as np
 
-            from .postings import decode_block
+            from .postings import decode_terms
 
-            # vectorized merge (same np.unique/np.add.at shape as
-            # engine/wand.py) — no per-posting Python loop in serving
+            # vectorized merge: one np.unique + np.add.at over every
+            # term's decoded run, added in ascending term order — no
+            # per-posting Python loop in serving
             parts_ids, parts_w = [], []
-            for row in pdf.itertuples(index=False):
-                ids, tfs, _ = decode_block(row)
-                w_td = (1.0 + np.log10(tfs)) * idf10[row.term]
+            for t, (ids, tfs, _) in decode_terms(pdf).items():
+                w_td = (1.0 + np.log10(tfs)) * idf10[t]
                 parts_ids.append(ids)
-                parts_w.append(w_td * qw[row.term])
+                parts_w.append(w_td * qw[t])
             all_ids = np.concatenate(parts_ids)
             all_w = np.concatenate(parts_w)
             uid, inv = np.unique(all_ids, return_inverse=True)
@@ -1549,7 +1543,7 @@ class IndexReader:
         the queried posting mass."""
         import pandas as pd
 
-        from .boolean import _decode_term_docs
+        from .postings import decode_terms
 
         terms = sorted(set(tokenize(query, use_stem=self.use_stem)))
         out_schema = "rank int, doc_id long, score double"
@@ -1597,7 +1591,7 @@ class IndexReader:
             def count_kernel(key, pdf: pd.DataFrame) -> pd.DataFrame:
                 import numpy as np
 
-                runs = [_decode_term_docs(g) for _, g in pdf.groupby("term")]
+                runs = [r[0] for r in decode_terms(pdf).values()]
                 if not runs:
                     return pd.DataFrame({"doc_id": []}).astype({"doc_id": "int64"})
                 ids, counts = np.unique(np.concatenate(runs), return_counts=True)
@@ -1621,7 +1615,7 @@ class IndexReader:
         (per-shard concat + unique; negative-posting-mass cost only)."""
         import pandas as pd
 
-        from .boolean import _decode_term_docs
+        from .postings import decode_terms
 
         out_schema = "rank int, doc_id long, score double"
         nterms = sorted(set(tokenize(negative, use_stem=self.use_stem)))
@@ -1700,7 +1694,7 @@ class IndexReader:
             def neg_kernel(key, pdf: pd.DataFrame) -> pd.DataFrame:
                 import numpy as np
 
-                runs = [_decode_term_docs(g) for _, g in pdf.groupby("term")]
+                runs = [r[0] for r in decode_terms(pdf).values()]
                 if not runs:
                     return pd.DataFrame({"doc_id": []}).astype({"doc_id": "int64"})
                 return pd.DataFrame({"doc_id": np.unique(np.concatenate(runs))})
@@ -2009,25 +2003,19 @@ class IndexReader:
             def count_kernel(pdf: pd.DataFrame) -> pd.DataFrame:
                 import numpy as np
 
-                from .postings import decode_block
+                from .postings import decode_terms, isin_sorted
 
-                per_term: dict[str, list] = {}
-                for row in pdf.itertuples(index=False):
-                    d_ids, _, _ = decode_block(row)
-                    if d_ids.size:
-                        per_term.setdefault(row.term, []).append(d_ids)
+                per_term = decode_terms(pdf)
                 drop = tomb_b.value
                 out_q: list[str] = []
                 out_n: list[int] = []
                 for qid, ts in qterms_b.value.items():
-                    arrs = [a for t in ts for a in per_term.get(t, ())]
+                    arrs = [per_term[t][0] for t in ts if t in per_term]
                     if not arrs:
                         continue
                     ids = np.unique(np.concatenate(arrs))
                     if drop is not None:
-                        ids = ids[
-                            ~np.isin(ids, drop, assume_unique=False)
-                        ]
+                        ids = ids[~isin_sorted(ids, drop)]
                     if ids.size:
                         out_q.append(qid)
                         out_n.append(int(ids.size))
@@ -2101,7 +2089,7 @@ class IndexReader:
         100 TB cost = queried posting mass + survivor-sized exchanges."""
         import pandas as pd
 
-        from .boolean import _decode_term_docs
+        from .postings import decode_terms
         from .qparser import parse_query, resolve_scoring_weights
 
         if self.use_stem:
@@ -2163,10 +2151,7 @@ class IndexReader:
             def mn_kernel(key, pdf: pd.DataFrame) -> pd.DataFrame:
                 import numpy as np
 
-                per = {
-                    str(t): _decode_term_docs(g)
-                    for t, g in pdf.groupby("term")
-                }
+                per = {t: r[0] for t, r in decode_terms(pdf).items()}
                 nothing = np.empty(0, dtype=np.int64)
                 if m_terms:
                     base = per.get(m_terms[0], nothing)
@@ -3033,34 +3018,22 @@ class IndexReader:
         import numpy as np
         import pandas as pd
 
-        from .codec import delta_decode
-        from .wand import _isin_sorted
+        from .postings import decode_terms, isin_sorted
 
         if not terms or cand_sorted.size == 0:
             return np.empty(0, dtype=np.int64)
         blocks = self.postings().where(F.col("term").isin(list(terms)))
 
         def kern(key, pdf: pd.DataFrame) -> pd.DataFrame:
-            runs = []
-            for _t, g in pdf.groupby("term"):
-                parts = []
-                for row in g.itertuples(index=False):
-                    lo = np.searchsorted(
-                        cand_sorted, row.first_doc_id, "left"
-                    )
-                    hi = np.searchsorted(
-                        cand_sorted, row.last_doc_id, "right"
-                    )
-                    if lo >= hi:
-                        continue  # no candidate in this block's range
-                    ids = delta_decode(bytes(row.doc_ids_blob), int(row.n))
-                    ids = ids[_isin_sorted(ids, cand_sorted)]
-                    if ids.size:
-                        parts.append(ids)
-                if parts:
-                    # ≤1 block row per doc per term → concat is the
-                    # term's distinct matched-candidate set
-                    runs.append(np.concatenate(parts))
+            # blocks whose doc_id range holds no candidate stay undecoded
+            lo = np.searchsorted(cand_sorted, pdf["first_doc_id"].to_numpy(), "left")
+            hi = np.searchsorted(cand_sorted, pdf["last_doc_id"].to_numpy(), "right")
+            # ≤1 block row per doc per term → each masked run is the
+            # term's distinct matched-candidate set
+            runs = [
+                ids[isin_sorted(ids, cand_sorted)]
+                for ids, _, _ in decode_terms(pdf[lo < hi]).values()
+            ]
             if not runs:
                 return pd.DataFrame({"doc_id": pd.Series([], dtype="int64")})
             ids, counts = np.unique(np.concatenate(runs), return_counts=True)

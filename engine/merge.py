@@ -15,10 +15,10 @@ This holds because:
 
 - both sides use the same doc-hash sharding, so a (shard, term) group's
   merged postings are exactly the union build's group;
-- the merge kernel decodes both sides' blocks, re-sorts by doc_id, and
-  re-encodes through the SAME block builder the build uses
-  (engine/postings.blocks_pdf_for_shard), with avgdl recomputed exactly
-  from the manifests' integer doc-length sums;
+- the merge kernel decodes both sides' blocks (postings.decode_terms)
+  and re-encodes them through the SAME block builder the build uses
+  (postings.build_blocks, which re-sorts by (term, doc_id)), with avgdl
+  recomputed exactly from the manifests' integer doc-length sums;
 - tf was capped before encoding, and capping is idempotent.
 
 Scale shape: one `groupBy(shard).applyInPandas` over the union of both
@@ -33,37 +33,13 @@ from __future__ import annotations
 import os
 import time
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .index import IndexReader, _read_manifest, _write_manifest
-from .postings import BLOCKS_SCHEMA, blocks_pdf_for_shard, decode_block
-
-
-def _decode_shard_to_tokens(pdf: pd.DataFrame) -> pd.DataFrame:
-    """Block rows (one shard, both source indexes) → exploded
-    (shard, term, doc_id, tf, doc_len) frame for the block builder."""
-    import numpy as np
-
-    shards, terms, ids, tfs, dls = [], [], [], [], []
-    for row in pdf.itertuples(index=False):
-        i, t, d = decode_block(row)
-        n = i.size
-        shards.append(np.full(n, row.shard, dtype=np.int64))
-        terms.extend([row.term] * n)
-        ids.append(i)
-        tfs.append(t)
-        dls.append(d)
-    return pd.DataFrame(
-        {
-            "shard": np.concatenate(shards),
-            "term": terms,
-            "doc_id": np.concatenate(ids),
-            "tf": np.concatenate(tfs),
-            "doc_len": np.concatenate(dls),
-        }
-    )
+from .postings import BLOCKS_SCHEMA, build_blocks, decode_terms, explode_terms
 
 
 def merge_indexes(
@@ -151,8 +127,8 @@ def merge_many(
         both = _union([r.postings() for r in readers])
 
         def _merge_kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-            toks = _decode_shard_to_tokens(pdf)
-            return blocks_pdf_for_shard(toks, avgdl, block_docs)
+            shard = int(pdf["shard"].iloc[0])
+            return build_blocks(shard, *explode_terms(decode_terms(pdf)), avgdl, block_docs)
 
         merged = both.groupBy("shard").applyInPandas(_merge_kernel, BLOCKS_SCHEMA)
         (
@@ -208,19 +184,14 @@ def merge_many(
             bc = spark.sparkContext.broadcast(df_map)
 
             def _norms_kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-                import numpy as np
-
                 acc_ids, acc_w2 = [], []
-                for row in pdf.itertuples(index=False):
-                    ids, tfs, _ = decode_block(row)
-                    dfv = float(bc.value[row.term])
+                for term, (ids, tfs, _) in decode_terms(pdf).items():
+                    dfv = float(bc.value[term])
                     w = (1.0 + np.log10(np.minimum(tfs, TF_CAP))) * math.log10(
                         n_docs / dfv
                     )
                     acc_ids.append(ids)
                     acc_w2.append(w * w)
-                import numpy as np
-
                 all_ids = np.concatenate(acc_ids)
                 all_w2 = np.concatenate(acc_w2)
                 uid, inv = np.unique(all_ids, return_inverse=True)
@@ -238,24 +209,11 @@ def merge_many(
             # doc. Exchanges the exploded posting stream, which is the
             # price of not holding the dictionary in one heap.
             def _explode_kernel(it):
-                import numpy as np
-
                 for pdf in it:
-                    terms, ids, tfs = [], [], []
-                    for row in pdf.itertuples(index=False):
-                        i, t, _ = decode_block(row)
-                        terms.extend([row.term] * i.size)
-                        ids.append(i)
-                        tfs.append(t)
-                    if not ids:
+                    if not len(pdf):
                         continue
-                    yield pd.DataFrame(
-                        {
-                            "term": terms,
-                            "doc_id": np.concatenate(ids),
-                            "tf": np.concatenate(tfs),
-                        }
-                    )
+                    terms, ids, tfs, _ = explode_terms(decode_terms(pdf))
+                    yield pd.DataFrame({"term": terms, "doc_id": ids, "tf": tfs})
 
             ex = postings.mapInPandas(
                 _explode_kernel, "term string, doc_id long, tf long"

@@ -168,14 +168,13 @@ def _percolate_kernel(
     every term's run before any set logic — the liveDocs mask."""
 
     def kernel(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        from .boolean import _decode_term_docs
+        from .postings import decode_terms
 
         per = {}
-        for term, grp in pdf.groupby("term"):
-            run = _decode_term_docs(grp)
+        for term, (run, _, _) in decode_terms(pdf).items():
             if tomb is not None and tomb.size:
                 run = np.setdiff1d(run, tomb, assume_unique=True)
-            per[str(term)] = run
+            per[term] = run
         nothing = np.empty(0, dtype=np.int64)
         out_q, out_n = [], []
         for qid, m_terms, n_terms in parsed:

@@ -115,49 +115,95 @@ BLOCK_COLUMNS = [
 ]
 
 
-def blocks_pdf_for_shard(pdf: pd.DataFrame, avgdl: float, block_docs: int) -> pd.DataFrame:
-    """applyInPandas kernel: one WHOLE SHARD of tokens → blocks for all
-    its terms. Grouping per (shard, term) would materialize one Arrow
-    batch per term (per-group overhead × vocabulary size — the dominant
-    cost at high shard counts); one shard-sized group amortizes it, and
-    a single lexsort by (term, doc_id) hands every term its doc-sorted
-    postings via slice boundaries. Shard size is the memory unit —
-    size n_shards so a shard's tokens fit an executor (the reference's
-    124-bucket knob, SURVEY.md §4)."""
-    shard = int(pdf["shard"].iloc[0])
-    terms = pdf["term"].to_numpy()
-    doc_ids = pdf["doc_id"].to_numpy(np.int64)
-    tfs = pdf["tf"].to_numpy(np.int64)
-    dls = pdf["doc_len"].to_numpy(np.int64)
-    order = np.lexsort((doc_ids, terms))
-    terms, doc_ids, tfs, dls = terms[order], doc_ids[order], tfs[order], dls[order]
-    uniq, starts = np.unique(terms, return_index=True)
-    bounds = np.append(starts, terms.size)
-    rows: list[tuple] = []
-    for i, term in enumerate(uniq):
-        lo, hi = bounds[i], bounds[i + 1]
-        rows.extend(
-            _blocks_for_sorted_term(
-                shard, term, doc_ids[lo:hi], tfs[lo:hi], dls[lo:hi], avgdl, block_docs
-            )
-        )
-    return pd.DataFrame(rows, columns=BLOCK_COLUMNS)
+def term_runs(blocks: pd.DataFrame) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """BLOCKS_SCHEMA rows (any row order, non-empty) → (order, terms,
+    bounds): ``order`` sorts the rows by (term, shard, block_id), and
+    rows ``order[bounds[i]:bounds[i + 1]]`` are the blocks of
+    ``terms[i]``, terms ascending."""
+    codes, terms = pd.factorize(blocks["term"].to_numpy(), sort=True)
+    order = np.lexsort(
+        (blocks["block_id"].to_numpy(), blocks["shard"].to_numpy(), codes)
+    )
+    bounds = np.searchsorted(codes[order], np.arange(terms.size + 1))
+    return order, terms, bounds
+
+
+def decode_terms(
+    blocks: pd.DataFrame,
+) -> dict[str, tuple[np.ndarray, np.ndarray, np.ndarray]]:
+    """BLOCKS_SCHEMA rows (any row order) → {term: (doc_ids, tfs, dls)},
+    terms ascending, from ONE decode_blocks call over the whole frame.
+    A term's blocks are concatenated in (shard, block_id) order, so
+    within one shard its run is doc_id-sorted and unique."""
+    if not len(blocks):
+        return {}
+    order, terms, bounds = term_runs(blocks)
+    n = blocks["n"].to_numpy(np.int64)[order]
+    cols = decode_blocks(
+        n,
+        *(
+            b"".join(blocks[c].to_numpy()[order])
+            for c in ("doc_ids_blob", "tfs_blob", "doc_lens_blob")
+        ),
+    )
+    off = np.concatenate(([0], np.cumsum(n)))[bounds]
+    return {
+        t: tuple(c[lo:hi] for c in cols)
+        for t, lo, hi in zip(terms, off[:-1], off[1:])
+    }
+
+
+def explode_terms(runs: dict) -> tuple[np.ndarray, ...]:
+    """decode_terms output (non-empty) → parallel (terms, doc_ids, tfs,
+    dls) arrays, one entry per posting."""
+    lens = [r[0].size for r in runs.values()]
+    terms = np.repeat(np.array(list(runs), dtype=object), lens)
+    return (terms, *(np.concatenate(c) for c in zip(*runs.values())))
+
+
+def isin_sorted(ids: np.ndarray, sorted_set: np.ndarray) -> np.ndarray:
+    """Boolean mask: which ids are in the SORTED, non-empty int64 array."""
+    pos = np.searchsorted(sorted_set, ids)
+    pos = np.minimum(pos, sorted_set.size - 1)
+    return sorted_set[pos] == ids
 
 
 def blocks_pdf_for_shard_arrays(
     pdf: pd.DataFrame, avgdl: float, block_docs: int
 ) -> pd.DataFrame:
     """applyInPandas kernel over the ARRAY-form checkpoint (one row per
-    doc: terms/tfs lists): explode in numpy, then the same
-    lexsort-by-(term, doc_id) slice walk as blocks_pdf_for_shard."""
-    shard = int(pdf["shard"].iloc[0])
+    doc: terms/tfs lists): explode in numpy, then build_blocks."""
     lens = pdf["terms"].map(len).to_numpy(np.int64)
-    if int(lens.sum()) == 0:
+    return build_blocks(
+        int(pdf["shard"].iloc[0]),
+        np.concatenate([np.asarray(t, dtype=object) for t in pdf["terms"]]),
+        np.repeat(pdf["doc_id"].to_numpy(np.int64), lens),
+        np.concatenate([np.asarray(t, dtype=np.int64) for t in pdf["tfs"]]),
+        np.repeat(pdf["doc_len"].to_numpy(np.int64), lens),
+        avgdl,
+        block_docs,
+    )
+
+
+def build_blocks(
+    shard: int,
+    terms: np.ndarray,
+    doc_ids: np.ndarray,
+    tfs: np.ndarray,
+    dls: np.ndarray,
+    avgdl: float,
+    block_docs: int,
+) -> pd.DataFrame:
+    """One WHOLE SHARD of postings (parallel arrays, any order) → its
+    blocks for all terms: the one block builder of the build and of
+    segment merge. One shard-sized call amortizes per-group overhead
+    that grouping per (shard, term) would pay per term, and a single
+    lexsort by (term, doc_id) hands every term its doc-sorted postings
+    via slice boundaries. Shard size is the memory unit — size n_shards
+    so a shard's tokens fit an executor (the reference's 124-bucket
+    knob, SURVEY.md §4)."""
+    if doc_ids.size == 0:
         return pd.DataFrame([], columns=BLOCK_COLUMNS)
-    doc_ids = np.repeat(pdf["doc_id"].to_numpy(np.int64), lens)
-    dls = np.repeat(pdf["doc_len"].to_numpy(np.int64), lens)
-    terms = np.concatenate([np.asarray(t, dtype=object) for t in pdf["terms"]])
-    tfs = np.concatenate([np.asarray(t, dtype=np.int64) for t in pdf["tfs"]])
     # sort by (term, doc_id) without object comparisons: factorize terms
     # in C, rank only the DISTINCT terms lexically (vocab-sized sort),
     # then one int64 lexsort — np.lexsort over an object array would
@@ -254,37 +300,3 @@ def blocks_batches_for_partition(
         out = blocks_pdf_for_shard_arrays(pdf, avgdl, block_docs)
         if len(out):
             yield out
-
-
-def _blocks_for_sorted_term(
-    shard: int,
-    term: str,
-    doc_ids: np.ndarray,
-    tfs: np.ndarray,
-    doc_lens: np.ndarray,
-    avgdl: float,
-    block_docs: int,
-) -> list[tuple]:
-    """Blocks for one term whose postings are ALREADY doc_id-sorted."""
-    tfs = np.minimum(tfs, TF_CAP)
-    rows = []
-    for b, start in enumerate(range(0, len(doc_ids), block_docs)):
-        ids = doc_ids[start : start + block_docs]
-        t = tfs[start : start + block_docs]
-        dl = doc_lens[start : start + block_docs]
-        rows.append(
-            (
-                shard,
-                term,
-                b,
-                int(ids.size),
-                int(ids[0]),
-                int(ids[-1]),
-                delta_encode(ids),
-                varint_encode(t.astype(np.uint64)),
-                varint_encode(dl.astype(np.uint64)),
-                float(score_norm(t, dl, avgdl).max()),
-                int(t.max()),
-            )
-        )
-    return rows

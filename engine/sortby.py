@@ -85,27 +85,21 @@ def match_sorted_from_index(
     tomb_b = spark.sparkContext.broadcast(tomb if tomb.size else None)
 
     def match_kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        from .postings import decode_block
+        from .postings import decode_terms, isin_sorted
 
-        per_term: dict[str, list] = {}
-        for row in pdf.itertuples(index=False):
-            d_ids, _, _ = decode_block(row)
-            if d_ids.size:
-                per_term.setdefault(row.term, []).append(d_ids)
-        if len(per_term) < n_terms:
+        runs = [r[0] for r in decode_terms(pdf).values()]
+        if len(runs) < n_terms:
             return pd.DataFrame({"doc_id": pd.Series([], dtype="int64")})
-        # blocks of one term are doc-sorted and disjoint → concat is
-        # the term's sorted run; conjunctive match = n-way intersection
-        ids = np.concatenate(per_term.pop(next(iter(per_term))))
-        for arrs in per_term.values():
-            ids = np.intersect1d(ids, np.concatenate(arrs), assume_unique=True)
+        # each run is the term's sorted unique doc_ids in this shard;
+        # conjunctive match = n-way intersection
+        ids = runs[0]
+        for run in runs[1:]:
+            ids = np.intersect1d(ids, run, assume_unique=True)
             if ids.size == 0:
                 break
         drop = tomb_b.value
         if drop is not None and ids.size:
-            pos = np.searchsorted(drop, ids)
-            pos = np.minimum(pos, drop.size - 1)
-            ids = ids[drop[pos] != ids]
+            ids = ids[~isin_sorted(ids, drop)]
         return pd.DataFrame({"doc_id": ids})
 
     matches = blocks.groupBy("shard").applyInPandas(

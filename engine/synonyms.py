@@ -170,22 +170,26 @@ def synonym_topk_from_index(
     # keep everything within the rounding half-step of the shard's k-th
     eps = 0.5 * 10.0 ** (-round_scores) if round_scores is not None else 0.0
 
-    def count_kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        from .postings import decode_block
+    def _per_group(pdf: pd.DataFrame) -> dict[str, list]:
+        """One shard's blocks → {group: [(doc_ids, tfs, dls) of each
+        member term]}, members in ascending term order."""
+        from .postings import decode_terms
 
         per_g: dict[str, list] = {}
-        for row in pdf.itertuples(index=False):
-            ids, _, _ = decode_block(row)
-            if ids.size:
-                for g in member_of[row.term]:
-                    per_g.setdefault(g, []).append(ids)
+        for t, run in decode_terms(pdf).items():
+            for g in member_of[t]:
+                per_g.setdefault(g, []).append(run)
+        return per_g
+
+    def count_kernel(pdf: pd.DataFrame) -> pd.DataFrame:
+        from .postings import isin_sorted
+
         gs, ns = [], []
-        for g, arrs in per_g.items():
-            ids = np.unique(np.concatenate(arrs))
+        for g, runs in _per_group(pdf).items():
+            ids = np.unique(np.concatenate([r[0] for r in runs]))
             drop = tomb_b.value
             if drop is not None:
-                pos = np.minimum(np.searchsorted(drop, ids), drop.size - 1)
-                ids = ids[drop[pos] != ids]
+                ids = ids[~isin_sorted(ids, drop)]
             if ids.size:
                 gs.append(g)
                 ns.append(int(ids.size))
@@ -214,29 +218,16 @@ def synonym_topk_from_index(
     w_b = spark.sparkContext.broadcast(w_of)
 
     def score_kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        from .postings import decode_block
+        from .postings import isin_sorted, score_norm
 
-        per_g_ids: dict[str, list] = {}
-        per_g_tfs: dict[str, list] = {}
-        per_g_dls: dict[str, list] = {}
-        for row in pdf.itertuples(index=False):
-            ids, tfs, dls = decode_block(row)
-            if not ids.size:
-                continue
-            for g in member_of[row.term]:
-                per_g_ids.setdefault(g, []).append(ids)
-                per_g_tfs.setdefault(g, []).append(tfs)
-                per_g_dls.setdefault(g, []).append(dls)
         acc_ids = np.empty(0, np.int64)
         acc_sc = np.empty(0, np.float64)
         weights = w_b.value
         drop = tomb_b.value
-        for g, id_arrs in per_g_ids.items():
+        for g, runs in _per_group(pdf).items():
             if g not in weights:
                 continue
-            ids = np.concatenate(id_arrs)
-            tfs = np.concatenate(per_g_tfs[g]).astype(np.int64)
-            dls = np.concatenate(per_g_dls[g]).astype(np.int64)
+            ids, tfs, dls = (np.concatenate(c) for c in zip(*runs))
             # blended tf: sum member tfs per doc, re-cap, saturate ONCE
             uid, inv = np.unique(ids, return_inverse=True)
             gtf = np.zeros(uid.size, dtype=np.int64)
@@ -245,11 +236,8 @@ def synonym_topk_from_index(
             udl = np.zeros(uid.size, dtype=np.int64)
             udl[inv] = dls  # dl is per-doc, any member's copy works
             if drop is not None:
-                pos = np.minimum(np.searchsorted(drop, uid), drop.size - 1)
-                live = drop[pos] != uid
+                live = ~isin_sorted(uid, drop)
                 uid, gtf, udl = uid[live], gtf[live], udl[live]
-            from .postings import score_norm
-
             sc = weights[g] * score_norm(gtf, udl, avgdl)
             both = np.concatenate([acc_ids, uid])
             scores = np.concatenate([acc_sc, sc])

@@ -48,7 +48,9 @@ import pandas as pd
 # decode_block stays importable here: tools that count kernel decodes
 # patch engine.wand.decode_block (the kernel itself decodes through
 # decode_blocks, one varint pass per term and column)
-from .postings import decode_block, decode_blocks, score_norm  # noqa: F401
+from .postings import (  # noqa: F401
+    decode_block, decode_blocks, isin_sorted, score_norm, term_runs,
+)
 
 
 class TermBlocks:
@@ -101,21 +103,17 @@ def term_blocks(blocks: pd.DataFrame, avgdl: float, terms=None) -> dict[str, Ter
     TermBlocks} in block_id order; only ``terms`` when given."""
     if not len(blocks):
         return {}
-    codes, uniq = pd.factorize(blocks["term"].to_numpy())
-    order = np.lexsort((blocks["block_id"].to_numpy(), codes))
-    codes = codes[order]
+    order, uniq, bounds = term_runs(blocks)
     cols = [
         blocks[c].to_numpy()[order]
         for c in ("first_doc_id", "last_doc_id", "block_max_norm", "n",
                   "doc_ids_blob", "tfs_blob", "doc_lens_blob")
     ]
-    cuts = np.flatnonzero(np.diff(codes)) + 1
-    out = {}
-    for lo, hi in zip(np.r_[0, cuts], np.r_[cuts, codes.size]):
-        t = uniq[codes[lo]]
-        if terms is None or t in terms:
-            out[t] = TermBlocks(*(c[lo:hi] for c in cols), avgdl)
-    return out
+    return {
+        t: TermBlocks(*(c[lo:hi] for c in cols), avgdl)
+        for t, lo, hi in zip(uniq, bounds[:-1], bounds[1:])
+        if terms is None or t in terms
+    }
 
 
 def _merge_accumulate(
@@ -156,13 +154,6 @@ def _theta(acc_sc: np.ndarray, k: int) -> float:
     if acc_sc.size < k:
         return -np.inf
     return float(np.partition(acc_sc, acc_sc.size - k)[acc_sc.size - k])
-
-
-def _isin_sorted(ids: np.ndarray, sorted_set: np.ndarray) -> np.ndarray:
-    """Boolean mask: which ids are in the SORTED int64 array."""
-    pos = np.searchsorted(sorted_set, ids)
-    pos = np.minimum(pos, sorted_set.size - 1)
-    return sorted_set[pos] == ids
 
 
 def _cursor_masks(
@@ -338,12 +329,12 @@ def topk_terms(
                 if not sel.size:
                     continue
                 ids, norm = tb.take(sel)
-                m = _isin_sorted(ids, keep_ids)
+                m = isin_sorted(ids, keep_ids)
                 ids, norm = ids[m], norm[m]
             else:
                 ids, norm = tb.take()
             if drop_ids is not None and drop_ids.size:
-                live = ~_isin_sorted(ids, drop_ids)
+                live = ~isin_sorted(ids, drop_ids)
                 ids, norm = ids[live], norm[live]
             if ids.size:
                 acc_ids, acc_sc = _merge_accumulate(acc_ids, acc_sc, ids, w * norm)

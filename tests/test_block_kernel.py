@@ -14,7 +14,12 @@ from engine.codec import varint_encode, varint_encode_with_lengths
 from engine.postings import (
     BLOCK_COLUMNS,
     blocks_pdf_for_shard_arrays,
+    build_blocks,
     build_blocks_for_term,
+    decode_block,
+    decode_blocks,
+    decode_terms,
+    explode_terms,
 )
 
 
@@ -85,6 +90,60 @@ def test_empty_and_zero_token_docs():
     )
     out = blocks_pdf_for_shard_arrays(pdf, 10.0, 128)
     assert len(out) == 0 and list(out.columns) == BLOCK_COLUMNS
+
+
+@given(st.data())
+@settings(max_examples=40, deadline=None)
+def test_decode_terms_equals_per_block_decode(data):
+    """Blocks of random terms over random shards, rows shuffled: one
+    decode_blocks pass over the concatenated blobs equals per-row
+    decode_block concatenated; decode_terms yields every term (ascending)
+    as its blocks decoded in (shard, block_id) order; and re-encoding a
+    shard's decoded runs through build_blocks gives back its blocks
+    byte for byte (the segment-merge identity)."""
+    rng = np.random.RandomState(data.draw(st.integers(0, 2**31 - 1)))
+    block_docs = data.draw(st.sampled_from([1, 3, 16, 128]))
+    shards = data.draw(st.lists(st.integers(0, 7), min_size=1, max_size=3, unique=True))
+    vocab = [f"t{i}" for i in range(data.draw(st.integers(1, 8)))]
+    rows = []
+    for shard in shards:
+        for t in vocab:
+            ids = np.unique(rng.randint(0, 2**62, size=rng.randint(0, 300)))
+            n = ids.size
+            if n:
+                rows.extend(build_blocks_for_term(
+                    shard, t, ids, rng.randint(1, 70000, size=n),
+                    rng.randint(1, 5000, size=n), 50.0, block_docs,
+                ))
+    if not rows:
+        return
+    ref = pd.DataFrame(rows, columns=BLOCK_COLUMNS)
+    blocks = ref.sample(frac=1.0, random_state=rng).reset_index(drop=True)
+
+    per_row = [decode_block(r) for r in blocks.itertuples(index=False)]
+    flat = decode_blocks(
+        blocks["n"].to_numpy(np.int64),
+        *(b"".join(blocks[c]) for c in ("doc_ids_blob", "tfs_blob", "doc_lens_blob")),
+    )
+    for got, want in zip(flat, zip(*per_row)):
+        assert np.array_equal(got, np.concatenate(want))
+
+    runs = decode_terms(blocks)
+    assert list(runs) == sorted(set(blocks["term"]))
+    for t, got in runs.items():
+        mine = ref[ref["term"] == t].sort_values(["shard", "block_id"])
+        want = [decode_block(r) for r in mine.itertuples(index=False)]
+        for g, w in zip(got, zip(*want)):
+            assert np.array_equal(g, np.concatenate(w))
+
+    for shard in shards:
+        mine = blocks[blocks["shard"] == shard]
+        if not len(mine):
+            continue
+        out = build_blocks(shard, *explode_terms(decode_terms(mine)), 50.0, block_docs)
+        want = ref[ref["shard"] == shard].reset_index(drop=True)
+        for c in BLOCK_COLUMNS:
+            assert list(out[c]) == list(want[c]), c
 
 
 # ---------------------------------------------------------------- searchAfter

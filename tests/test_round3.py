@@ -64,7 +64,7 @@ def test_wand_eps_keeps_rounding_boundary_docs():
     sort key and win the doc_id tiebreak downstream)."""
     import numpy as np
 
-    from engine.postings import blocks_pdf_for_shard
+    from engine.postings import build_blocks
     from engine.wand import topk_shard
 
     # one term, three docs; weights/avgdl chosen so doc scores are
@@ -72,16 +72,8 @@ def test_wand_eps_keeps_rounding_boundary_docs():
     ids = np.array([1, 2, 3], dtype=np.int64)
     tfs = np.array([5, 3, 3], dtype=np.int64)
     dls = np.array([10, 10, 10], dtype=np.int64)
-    pdf = pd.DataFrame(
-        {
-            "shard": np.zeros(3, dtype=np.int64),
-            "term": ["t"] * 3,
-            "doc_id": ids,
-            "tf": tfs,
-            "doc_len": dls,
-        }
-    )
-    blocks = blocks_pdf_for_shard(pdf, avgdl=10.0, block_docs=128)
+    terms = np.array(["t"] * 3, dtype=object)
+    blocks = build_blocks(0, terms, ids, tfs, dls, avgdl=10.0, block_docs=128)
     w = {"t": 1.0}
     # exact kernel scores for all three docs
     all_ids, all_sc = topk_shard(blocks, w, avgdl=10.0, k=3, prune=False)
