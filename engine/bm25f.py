@@ -306,16 +306,9 @@ def fielded_topk_from_index(
     n = float(reader.manifest["stats"]["n_docs"])
     avgdl = float(reader.manifest["stats"]["avgdl"])
     avg_tlen = reader.avg_tlen
-    dfs = {
-        r["term"]: float(r["df"])
-        for r in reader.dictionary()
-        .where(F.col("term").isin(terms))
-        .select("term", "df")
-        .collect()
-    }
     idf_of = {
         t: math.log(1.0 + (n - df + 0.5) / (df + 0.5))
-        for t, df in dfs.items()
+        for t, (df, _) in reader._term_stats(terms).items()
     }
     if not idf_of:
         return spark.createDataFrame([], "rank int, doc_id long, score double")

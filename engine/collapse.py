@@ -128,37 +128,21 @@ ORDER BY score DESC, doc_id ASC LIMIT {int(k)}
 
 def collapse_topk_from_index(reader, query: str, k: int = 10, *,
                              round_scores: int | None = None) -> DataFrame:
-    """Index-served twin: exhaustive per-shard scoring of the query's
-    posting blocks (θ-pruning is not rank-safe under collapsing — see
-    module docstring), repo from the doc_stats artifact, then the same
-    collapse. Rank-identical to collapse_topk (same DuckDB oracle)."""
-    import pandas as pd
-
-    qtf = Counter(tokenize(query, use_stem=reader.use_stem))
-    weights = reader._weights({"": qtf})[0][""]
-    if not weights:
+    """Index-served twin: exhaustive scoring of the query's posting
+    blocks over live docs (reader.bm25_scores_all — θ-pruning is not
+    rank-safe under collapsing, see module docstring), repo from the
+    doc_stats artifact, then the same collapse. Rank-identical to
+    collapse_topk (same DuckDB oracle). A query with no in-vocabulary
+    term gets the empty frame without a Spark job."""
+    if not reader.query_weights(query):
         return reader.spark.createDataFrame(
             [], "rank int, doc_id long, repo string, score double"
         )
-    avgdl = reader.manifest["stats"]["avgdl"]
-    tomb = reader._tomb_array()
-    tomb = tomb if tomb.size else None
-
-    def shard_kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        from .wand import topk_shard
-
-        # k = full match set: every group's champion must survive
-        ids, sc = topk_shard(
-            pdf, weights, avgdl, 1 << 62, prune=False, drop_ids=tomb
-        )
-        return pd.DataFrame({"doc_id": ids, "score": sc})
-
-    scored = reader.postings().where(F.col("term").isin(sorted(weights))).groupBy(
-        "shard"
-    ).applyInPandas(shard_kernel, "doc_id long, score double")
     # group-key fetch: INNER join, so AQE broadcasts the (match-set-
     # sized) scored side and doc_stats stays a streamed two-column
     # pruned scan — no corpus-sized exchange (the LEFT-outer metadata
     # join pitfall from the round-3 verdict does not apply here)
-    scored = scored.join(reader.doc_stats().select("doc_id", "repo"), "doc_id")
+    scored = reader.bm25_scores_all(query).join(
+        reader.doc_stats().select("doc_id", "repo"), "doc_id"
+    )
     return _collapse(scored, k, round_scores)

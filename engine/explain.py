@@ -29,7 +29,7 @@ from pyspark.sql import functions as F
 
 from . import BM25_K1, BM25_B, TF_CAP
 from .build import corpus_stats_df, doc_stats_df, tokens_df
-from .query import bm25_score_col, idf_col, query_terms_df
+from .query import bm25_score_col, idf_col, idf_py, query_terms_df
 
 ROUND = 6
 
@@ -112,7 +112,9 @@ def explain_from_index(
     docs inside the decode kernel (np.isin against a k-element array —
     nothing corpus-sized leaves any task), and rebuild each component
     from the block payloads: tf and doc_len are denormalized in the
-    blocks, df comes from the dictionary, N/avgdl from the manifest."""
+    blocks, df and the weights qtf·idf_py from reader._weights (the
+    floats the kernel sums; a pyarrow dictionary read, no Spark job),
+    N/avgdl from the manifest."""
     import numpy as np
     import pandas as pd
 
@@ -156,19 +158,20 @@ def explain_from_index(
     )
     n = float(reader.manifest["stats"]["n_docs"])
     avgdl = float(reader.manifest["stats"]["avgdl"])
-    dic = reader.dictionary().where(F.col("term").isin(list(qtf_map))).select(
-        "term", F.col("df").cast("long").alias("df")
+    # the kernel's own weights: w = qtf·idf_py is the partial's first
+    # product (Spark multiplies left to right), the float the kernel
+    # multiplies each posting's norm by
+    weights, stats = reader._weights({"": qtf_map})
+    terms_df = spark.createDataFrame(
+        [(t, stats[t][0], idf_py(float(stats[t][0]), n), w)
+         for t, w in sorted(weights[""].items())],
+        "term string, df long, idf double, w double",
     )
-    qtf_df = spark.createDataFrame(
-        [(t, q) for t, q in sorted(qtf_map.items())], "term string, qtf double"
-    )
-    idf = idf_col(F.col("df").cast("double"), F.lit(n))
     tf_c = F.least(F.col("tf"), F.lit(TF_CAP)).cast("double")
     denom = tf_c + BM25_K1 * (1.0 - BM25_B + BM25_B * F.col("dl").cast("double") / avgdl)
-    partial = F.col("qtf") * idf * tf_c * (BM25_K1 + 1.0) / denom
+    partial = F.col("w") * tf_c * (BM25_K1 + 1.0) / denom
     return (
-        dec.join(F.broadcast(dic), "term")
-        .join(F.broadcast(qtf_df), "term")
+        dec.join(F.broadcast(terms_df), "term")
         .join(F.broadcast(top_df), "doc_id")
         .select(
             "rank",
@@ -176,7 +179,7 @@ def explain_from_index(
             "term",
             F.least(F.col("tf"), F.lit(TF_CAP)).cast("long").alias("tf"),
             "df",
-            F.round(idf, round_scores).alias("idf"),
+            F.round("idf", round_scores).alias("idf"),
             F.round(partial, round_scores).alias("partial"),
             "score",
         )

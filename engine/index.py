@@ -1536,15 +1536,9 @@ class IndexReader:
         """minimum_should_match OR search served from the index
         (engine/funcscore.msm_topk semantics, same DuckDB oracle msm_sql):
         scores from the exhaustive union kernel (bm25_scores_all), the
-        ≥ m distinct-terms gate from the posting doc runs — per shard
-        the decoded per-term runs concatenate and np.unique counts give
-        exact per-doc matched-term counts (a doc's postings live wholly
-        in its shard), so the gate's exchange is survivor-sized, never
-        the queried posting mass."""
-        import pandas as pd
-
-        from .postings import decode_terms
-
+        ≥ m distinct-terms gate from the posting doc runs
+        (_cand_match_ids), so the gate's exchange is survivor-sized,
+        never the queried posting mass."""
         terms = sorted(set(tokenize(query, use_stem=self.use_stem)))
         out_schema = "rank int, doc_id long, score double"
         m = int(min_should_match)
@@ -1586,21 +1580,7 @@ class IndexReader:
 
         bm = self.bm25_scores_all(query)
         if m > 1:
-            blocks = self.postings().where(F.col("term").isin(terms))
-
-            def count_kernel(key, pdf: pd.DataFrame) -> pd.DataFrame:
-                import numpy as np
-
-                runs = [r[0] for r in decode_terms(pdf).values()]
-                if not runs:
-                    return pd.DataFrame({"doc_id": []}).astype({"doc_id": "int64"})
-                ids, counts = np.unique(np.concatenate(runs), return_counts=True)
-                return pd.DataFrame({"doc_id": ids[counts >= m]})
-
-            keep = blocks.groupBy("shard").applyInPandas(
-                count_kernel, "doc_id long"
-            )
-            bm = bm.join(keep, "doc_id")
+            bm = bm.join(self._cand_match_ids(terms, None, m), "doc_id")
         return _ranked_cut(bm, k, round_scores)
 
     def boosting_topk(
@@ -1612,12 +1592,7 @@ class IndexReader:
         positive scores from the exhaustive union kernel — the demotion
         factor is rank-unsafe after a top-k cut, like function_score —
         and the negative doc set from the isin-pruned posting doc runs
-        (per-shard concat + unique; negative-posting-mass cost only)."""
-        import pandas as pd
-
-        from .postings import decode_terms
-
-        out_schema = "rank int, doc_id long, score double"
+        (_cand_match_ids with m = 1; negative-posting-mass cost only)."""
         nterms = sorted(set(tokenize(negative, use_stem=self.use_stem)))
 
         # TA serving (see _mod_serve): negative_boost ≤ 1 only demotes,
@@ -1665,16 +1640,11 @@ class IndexReader:
         ):
             # deep demotion: attempt TA only when the negative terms are
             # rare enough that top candidates are likely undemoted —
-            # one isin-pruned dictionary lookup (vocabulary-sized scan,
-            # no posting access), spent only on enabled variants
+            # one pyarrow dictionary read (_term_stats, no Spark job),
+            # spent only on enabled variants
             n = float(self.manifest["stats"]["n_docs"])
-            dfs = (
-                self.dictionary()
-                .where(F.col("term").isin(nterms))
-                .agg(F.sum("df").alias("s"))
-                .collect()[0]["s"]
-            )
-            h = min(1.0, float(dfs or 0) / n) if n else 1.0
+            dfs = sum(df for df, _ in self._term_stats(nterms).values())
+            h = min(1.0, dfs / n) if n else 1.0
             try_ta = h < self._MOD_TA_NEG_RARE
         served = (
             self._mod_serve(
@@ -1689,19 +1659,7 @@ class IndexReader:
 
         bm = self.bm25_scores_all(positive)
         if nterms:
-            blocks = self.postings().where(F.col("term").isin(nterms))
-
-            def neg_kernel(key, pdf: pd.DataFrame) -> pd.DataFrame:
-                import numpy as np
-
-                runs = [r[0] for r in decode_terms(pdf).values()]
-                if not runs:
-                    return pd.DataFrame({"doc_id": []}).astype({"doc_id": "int64"})
-                return pd.DataFrame({"doc_id": np.unique(np.concatenate(runs))})
-
-            neg = blocks.groupBy("shard").applyInPandas(
-                neg_kernel, "doc_id long"
-            ).withColumn("_neg", F.lit(True))
+            neg = self._cand_match_ids(nterms, None, 1).withColumn("_neg", F.lit(True))
             bm = bm.join(neg, "doc_id", "left").select(
                 "doc_id",
                 (
@@ -1853,9 +1811,9 @@ class IndexReader:
         the filter's per-shard survivor doc_ids ride INTO the kernel as
         a keep-mask — only surviving docs enter the accumulator, θ is
         then a floor over filtered docs only, and every block-max /
-        MaxScore drop re-engages. Mechanically: σ(doc_stats) projected
-        to (shard, doc_id) — shard re-derived as xxhash64(doc_id) %
-        n_shards, the build's own bucketing — is COGROUPED with the
+        MaxScore drop re-engages. Mechanically: σ(doc_stats).doc_id is
+        the ``keep`` frame of _shard_topk, which buckets it by the
+        build's own xxhash64(doc_id) % n_shards and COGROUPS it with the
         isin-pruned posting blocks, so each shard's kernel sees exactly
         its own survivors; nothing filter-sized ever visits the driver.
 
@@ -1863,41 +1821,19 @@ class IndexReader:
         filtered doc_stats — proportional to the filter's survivor
         count, not the corpus — against the already-shard-partitioned
         blocks; the global cut stays TakeOrderedAndProject."""
-        import pandas as pd
-
         from collections import Counter
 
         qtf = Counter(tokenize(query, use_stem=self.use_stem))
-        weights = self._weights({"": qtf})[0][""]
-        if not weights:
+        weights = self._weights({"": qtf})[0]
+        if not weights[""]:
             return self.spark.createDataFrame([], "rank int, doc_id long, score double")
-        avgdl = self.manifest["stats"]["avgdl"]
-        n_shards = self.manifest["config"]["n_shards"]
-        blocks = self.postings().where(F.col("term").isin(sorted(weights)))
         keep = self.doc_stats()
         if repo is not None:
             keep = keep.where(F.col("repo") == repo)
         if path_prefix is not None:
             keep = keep.where(F.col("path").startswith(path_prefix))
-        keep = keep.select(
-            "doc_id",
-            F.pmod(F.xxhash64("doc_id"), F.lit(n_shards)).cast("int").alias("shard"),
-        )
-        kw = self._kernel_kw(prune, round_scores)
-
-        def shard_kernel(bl: pd.DataFrame, kp: pd.DataFrame) -> pd.DataFrame:
-            import numpy as np
-
-            from .wand import topk_shard
-
-            keep_ids = np.sort(kp["doc_id"].to_numpy(dtype=np.int64))
-            ids, sc = topk_shard(bl, weights, avgdl, k, keep_ids=keep_ids, **kw)
-            return pd.DataFrame({"doc_id": ids, "score": sc})
-
-        per_shard = (
-            blocks.groupBy("shard")
-            .cogroup(keep.groupBy("shard"))
-            .applyInPandas(shard_kernel, "doc_id long, score double")
+        per_shard = self._shard_topk(
+            weights, k, keep=keep.select("doc_id"), **self._kernel_kw(prune, round_scores)
         )
         return _ranked_cut(per_shard, k, round_scores)
 
@@ -2077,19 +2013,19 @@ class IndexReader:
         pruned dictionary (≤ max_expansions driver rows each); every
         constraint becomes a per-shard survivor/excluded doc_id frame —
         must/must_not from the isin-pruned posting blocks' doc runs
-        (a doc's postings live wholly in its shard, so per-shard set
-        algebra is exact), phrases from the isin-pruned position
-        blocks (engine/positions._phrase_kernel), repo/path filters
-        from σ(doc_stats) — keeps intersected (survivor-sized inner
-        joins), drops unioned, and the combined (shard, doc_id, kind)
-        frame COGROUPED into the block-max kernel: keeps ride the
-        filtered_topk keep-mask (θ stays a floor over eligible docs,
-        so pruning is rank-safe under every constraint), drops ride
-        the tombstone mask. Nothing corpus-sized visits the driver;
-        100 TB cost = queried posting mass + survivor-sized exchanges."""
-        import pandas as pd
+        (_cand_match_ids: docs matching every must term are kept, docs
+        matching any must_not term dropped), phrases from the
+        isin-pruned position blocks (engine/positions._phrase_kernel),
+        repo/path filters from σ(doc_stats) — keeps intersected
+        (survivor-sized inner joins), drops unioned, and both run
+        through _shard_topk as its ``keep`` / ``drop`` frames, which it
+        COGROUPS into the block-max kernel: keeps ride the filtered_topk
+        keep-mask (θ stays a floor over eligible docs, so pruning is
+        rank-safe under every constraint), drops join the tombstone
+        mask. Nothing corpus-sized visits the driver; 100 TB cost =
+        queried posting mass + survivor-sized exchanges."""
+        from functools import reduce
 
-        from .postings import decode_terms
         from .qparser import parse_query, resolve_scoring_weights
 
         if self.use_stem:
@@ -2116,16 +2052,6 @@ class IndexReader:
                 qtf_map, k, prune=prune, round_scores=round_scores
             )
 
-        n_shards = self.manifest["config"]["n_shards"]
-
-        def _aux(df: DataFrame, kind: int) -> DataFrame:
-            return df.select(
-                F.pmod(F.xxhash64("doc_id"), F.lit(n_shards))
-                .cast("int").alias("shard"),
-                F.col("doc_id").cast("long").alias("doc_id"),
-                F.lit(kind).cast("int").alias("kind"),
-            )
-
         keeps: list[DataFrame] = []
         drops: list[DataFrame] = []
 
@@ -2142,38 +2068,11 @@ class IndexReader:
             keeps.append(meta.select("doc_id"))
 
         # -- must / must_not from posting doc runs --------------------
-        m_terms, n_terms = list(parsed.must), list(parsed.must_not)
-        if m_terms or n_terms:
-            involved = sorted(set(m_terms + n_terms))
-            blocks_mn = self.postings().where(F.col("term").isin(involved))
-            emit_kind = 0 if m_terms else 1
-
-            def mn_kernel(key, pdf: pd.DataFrame) -> pd.DataFrame:
-                import numpy as np
-
-                per = {t: r[0] for t, r in decode_terms(pdf).items()}
-                nothing = np.empty(0, dtype=np.int64)
-                if m_terms:
-                    base = per.get(m_terms[0], nothing)
-                    for t in m_terms[1:]:
-                        base = np.intersect1d(
-                            base, per.get(t, nothing), assume_unique=True
-                        )
-                    if n_terms and base.size:
-                        excl = np.unique(np.concatenate(
-                            [per.get(t, nothing) for t in n_terms]
-                        ))
-                        base = np.setdiff1d(base, excl, assume_unique=True)
-                else:
-                    base = np.unique(np.concatenate(
-                        [per.get(t, nothing) for t in n_terms] or [nothing]
-                    ))
-                return pd.DataFrame({"doc_id": base})
-
-            mn = blocks_mn.groupBy("shard").applyInPandas(
-                mn_kernel, "doc_id long"
-            )
-            (keeps if emit_kind == 0 else drops).append(mn)
+        must = sorted(set(parsed.must))
+        if must:
+            keeps.append(self._cand_match_ids(must, None, len(must)))
+        if parsed.must_not:
+            drops.append(self._cand_match_ids(sorted(set(parsed.must_not)), None, 1))
 
         # -- phrases from position blocks ------------------------------
         if parsed.phrases:
@@ -2190,48 +2089,12 @@ class IndexReader:
                 )
                 (drops if neg else keeps).append(occ)
 
-        keep = None
-        for f in keeps:
-            keep = f if keep is None else keep.join(f, "doc_id")
-        aux_parts = []
-        if keep is not None:
-            aux_parts.append(_aux(keep, 0))
-        for f in drops:
-            aux_parts.append(_aux(f, 1))
-        aux = aux_parts[0]
-        for f in aux_parts[1:]:
-            aux = aux.unionByName(f)
-        has_keep = keep is not None
-
         # -- masked block-max scoring (the filtered_topk mechanism) ----
-        avgdl = self.manifest["stats"]["avgdl"]
-        weights = self._weights({"": qtf_map})[0][""]
-        blocks = self.postings().where(F.col("term").isin(sorted(weights)))
-        kw = self._kernel_kw(prune, round_scores)
-        tomb = kw.pop("drop_ids")
-
-        def shard_kernel(bl: pd.DataFrame, ax: pd.DataFrame) -> pd.DataFrame:
-            import numpy as np
-
-            from .wand import topk_shard
-
-            keep_ids = (
-                np.sort(ax.loc[ax["kind"] == 0, "doc_id"].to_numpy(np.int64))
-                if has_keep else None
-            )
-            drop = ax.loc[ax["kind"] == 1, "doc_id"].to_numpy(np.int64)
-            if tomb is not None:
-                drop = np.concatenate([drop, tomb])
-            drop_ids = np.unique(drop) if drop.size else None
-            ids, sc = topk_shard(
-                bl, weights, avgdl, k, drop_ids=drop_ids, keep_ids=keep_ids, **kw
-            )
-            return pd.DataFrame({"doc_id": ids, "score": sc})
-
-        per_shard = (
-            blocks.groupBy("shard")
-            .cogroup(aux.groupBy("shard"))
-            .applyInPandas(shard_kernel, "doc_id long, score double")
+        keep = reduce(lambda a, b: a.join(b, "doc_id"), keeps) if keeps else None
+        drop = reduce(DataFrame.unionByName, drops) if drops else None
+        per_shard = self._shard_topk(
+            self._weights({"": qtf_map})[0], k, keep=keep, drop=drop,
+            **self._kernel_kw(prune, round_scores),
         )
         return _ranked_cut(per_shard, k, round_scores)
 
@@ -2359,16 +2222,31 @@ class IndexReader:
         return {qid: _final_cut(h, k, round_scores, after) for qid, h in sorted(hits.items())}
 
     def _shard_topk(self, weights: dict, k: int, *, avgdl: float | None = None,
-                    bound_scale: float = 1.0, **kw) -> DataFrame:
-        """One applyInPandas over the isin-pruned postings: each shard's
-        TermBlocks are built once and topk_terms scores every query of
-        ``weights`` → unrounded (query_id, doc_id, score) of each
-        shard's local top-k. The Spark branch of _topk_hits, and the
-        per-generation body of federated serving (engine/federated.py),
-        which passes the global ``avgdl`` and ``bound_scale`` =
-        max(1, avgdl_global / avgdl_built) so this index's stored
-        block-max bounds stay upper bounds under the foreign avgdl
-        (proof in the engine/wand.py topk_terms docstring)."""
+                    bound_scale: float = 1.0, keep: DataFrame | None = None,
+                    drop: DataFrame | None = None, drop_ids=None,
+                    **kw) -> DataFrame:
+        """The one Spark BM25 scoring kernel: one applyInPandas over the
+        isin-pruned postings, where each shard's TermBlocks are built
+        once and topk_terms scores every query of ``weights`` →
+        unrounded (query_id, doc_id, score) of each shard's local top-k.
+        The Spark branch of _topk_hits, filtered_topk, constrained
+        query_string_topk and (k = everything, prune=False)
+        bm25_scores_all; and the per-generation body of federated
+        serving (engine/federated.py), which passes the global ``avgdl``
+        and ``bound_scale`` = max(1, avgdl_global / avgdl_built) so this
+        index's stored block-max bounds stay upper bounds under the
+        foreign avgdl (proof in the engine/wand.py topk_terms docstring).
+
+        ``keep`` / ``drop`` are doc_id frames: only ``keep`` docs may be
+        scored (the kernel's keep-mask, so θ stays a floor over eligible
+        docs and pruning stays rank-safe), and ``drop`` docs join the
+        ``drop_ids`` mask (tombstones, _kernel_kw). Each is bucketed by
+        the build's pmod(xxhash64(doc_id), n_shards) and COGROUPED with
+        the blocks, so each shard's kernel sees exactly its own ids and
+        nothing filter-sized visits the driver."""
+        from functools import reduce
+
+        import numpy as np
         import pandas as pd
 
         from .wand import term_blocks, topk_terms
@@ -2376,17 +2254,41 @@ class IndexReader:
         if avgdl is None:
             avgdl = self.manifest["stats"]["avgdl"]
 
-        def shard_kernel(pdf: pd.DataFrame) -> pd.DataFrame:
+        def score(pdf: pd.DataFrame, keep_ids, drop_ids) -> pd.DataFrame:
             postings = term_blocks(pdf, avgdl)
             return _batch_table({
-                qid: topk_terms(postings, w, k, bound_scale=bound_scale, **kw)
+                qid: topk_terms(postings, w, k, bound_scale=bound_scale,
+                                keep_ids=keep_ids, drop_ids=drop_ids, **kw)
                 for qid, w in weights.items()
             }).to_pandas()
 
         terms = sorted({t for w in weights.values() for t in w})
-        return self.postings().where(F.col("term").isin(terms)).groupBy(
-            "shard"
-        ).applyInPandas(shard_kernel, "query_id string, doc_id long, score double")
+        blocks = self.postings().where(F.col("term").isin(terms)).groupBy("shard")
+        schema = "query_id string, doc_id long, score double"
+        if keep is None and drop is None:
+            return blocks.applyInPandas(lambda pdf: score(pdf, None, drop_ids), schema)
+
+        n_shards = self.manifest["config"]["n_shards"]
+        aux = reduce(DataFrame.unionByName, [
+            f.select(
+                F.pmod(F.xxhash64("doc_id"), F.lit(n_shards)).cast("int").alias("shard"),
+                F.col("doc_id").cast("long").alias("doc_id"),
+                F.lit(kind).alias("kind"),
+            )
+            for f, kind in ((keep, 0), (drop, 1)) if f is not None
+        ])
+        has_keep = keep is not None
+
+        def masked(bl: pd.DataFrame, ax: pd.DataFrame) -> pd.DataFrame:
+            ids = ax["doc_id"].to_numpy(np.int64)
+            kind = ax["kind"].to_numpy()
+            keep_ids = np.sort(ids[kind == 0]) if has_keep else None
+            d = ids[kind == 1]
+            if drop_ids is not None:
+                d = np.concatenate([d, drop_ids])
+            return score(bl, keep_ids, np.unique(d) if d.size else None)
+
+        return blocks.cogroup(aux.groupBy("shard")).applyInPandas(masked, schema)
 
     def _local_blocks(self, terms):
         """Driver-side (shard, blocks frame) groups, shard ascending, of
@@ -2403,36 +2305,26 @@ class IndexReader:
         ).to_pandas().groupby("shard", sort=True)
 
     def bm25_scores_all(self, query: str) -> DataFrame:
-        """(doc_id, score) for EVERY doc matching ≥1 query term — the
-        exhaustive union scoring over the index (no top-k cut, no
+        """(doc_id, score) for EVERY live doc matching ≥1 query term —
+        the exhaustive union scoring over the index (no top-k cut, no
         pruning). Feeds fusion's max-normalization, which needs the full
-        score distribution, not just the top-k.
+        score distribution, not just the top-k, and every exhaustive
+        modifier surface (msm, boosting, function_score, collapse).
 
-        Like bm25_topk's Spark path, the kernel closes over the query
-        weights from one pyarrow dictionary read (_weights; no Spark
-        job), so a fusion query launches no extra driver job per
-        signal."""
-        import pandas as pd
-
+        Runs _shard_topk with k = "everything" and prune=False (θ never
+        becomes finite, so the OR phase runs to completion and no
+        accumulator doc is cut), the drop mask of _kernel_kw
+        (tombstones), and the weights of one pyarrow dictionary read
+        (_weights; no Spark job)."""
         from collections import Counter
 
         qtf = Counter(tokenize(query, use_stem=self.use_stem))
-        weights = self._weights({"": qtf})[0][""]
-        if not weights:
+        weights = self._weights({"": qtf})[0]
+        if not weights[""]:
             return self.spark.createDataFrame([], "doc_id long, score double")
-        avgdl = self.manifest["stats"]["avgdl"]
-
-        def shard_kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-            from .wand import topk_shard
-
-            # k = "everything": theta never becomes finite, so the OR
-            # phase runs to completion and no accumulator doc is cut
-            ids, sc = topk_shard(pdf, weights, avgdl, 1 << 31, prune=False)
-            return pd.DataFrame({"doc_id": ids, "score": sc})
-
-        return self.postings().where(F.col("term").isin(sorted(weights))).groupBy(
-            "shard"
-        ).applyInPandas(shard_kernel, "doc_id long, score double")
+        return self._shard_topk(
+            weights, 1 << 31, **self._kernel_kw(False, None)
+        ).select("doc_id", "score")
 
     def _body_scores_once(self, query: str) -> DataFrame:
         """bm25_scores_all behind a lazy localCheckpoint: the exhaustive
@@ -2567,11 +2459,13 @@ class IndexReader:
         """One applyInPandas job → pandas (doc_id, score, src) with
         src=0 the per-shard eps-slack top-k' (pruned kernel; skipped
         when with_topk=False) and src=1 the exact scores of every
-        keep_ids doc matching ≥1 term (prune=False keep-mask pass —
-        a keep id ABSENT from the output therefore provably matches no
-        query term, i.e. its body score is exactly 0). Scores are
-        exact full BM25 in both passes (identical term-order
-        accumulation)."""
+        live keep_ids doc matching ≥1 term (prune=False keep-mask pass
+        — a keep id ABSENT from the output therefore provably matches no
+        query term or is deleted, i.e. its body score is exactly 0, as
+        in bm25_scores_all). Both passes drop the tombstones of
+        _kernel_kw. Scores are exact full BM25 in both passes
+        (identical term-order accumulation). The one BM25 kernel outside
+        _shard_topk: its two passes share each shard's decodes."""
         import numpy as np
         import pandas as pd
 
@@ -2579,6 +2473,7 @@ class IndexReader:
         weights = self._weights({"": qtf_map})[0][""]
         blocks = self.postings().where(F.col("term").isin(sorted(weights)))
         keep = keep_ids if keep_ids is not None and keep_ids.size else None
+        drop = self._kernel_kw(True, None)["drop_ids"]
 
         def kern(pdf: pd.DataFrame) -> pd.DataFrame:
             from .wand import term_blocks, topk_terms
@@ -2586,12 +2481,14 @@ class IndexReader:
             postings = term_blocks(pdf, avgdl)  # both passes share the decodes
             out = []
             if with_topk:
-                ids1, sc1 = topk_terms(postings, weights, k_body, prune=True, eps=eps)
+                ids1, sc1 = topk_terms(postings, weights, k_body, prune=True,
+                                       eps=eps, drop_ids=drop)
                 out.append(pd.DataFrame({"doc_id": ids1, "score": sc1,
                                          "src": np.zeros(ids1.size, dtype=np.int32)}))
             if keep is not None:
                 ids2, sc2 = topk_terms(
-                    postings, weights, 1 << 31, prune=False, keep_ids=keep
+                    postings, weights, 1 << 31, prune=False, keep_ids=keep,
+                    drop_ids=drop,
                 )
                 out.append(pd.DataFrame({"doc_id": ids2, "score": sc2,
                                          "src": np.ones(ids2.size, dtype=np.int32)}))
@@ -3009,42 +2906,47 @@ class IndexReader:
         return self._mod_miss(variant)
 
     def _cand_match_ids(self, terms, cand_sorted, m: int):
-        """doc_ids among ``cand_sorted`` (sorted int64 candidates)
-        matching ≥ ``m`` distinct ``terms``, from the isin-pruned
-        posting doc runs: blocks whose doc_id range contains no
-        candidate are skipped UNDECODED, decoded runs are masked to
-        candidates before counting — candidate-mass cost, never the
-        full queried posting mass. One applyInPandas job."""
+        """doc_ids matching ≥ ``m`` distinct ``terms``, from the
+        isin-pruned posting doc runs: per shard the decoded per-term
+        runs concatenate and np.unique counts give exact per-doc
+        matched-term counts (a doc's postings live wholly in its shard).
+        With ``cand_sorted`` (sorted int64 candidates) only candidates
+        count: blocks whose doc_id range contains no candidate are
+        skipped UNDECODED and decoded runs are masked to candidates —
+        candidate-mass cost — and the ids come back collected, as a
+        numpy array. With ``cand_sorted`` None every matching doc
+        counts and the lazy (doc_id long) frame is returned: queried
+        posting-mass cost, survivor-sized output. One applyInPandas."""
         import numpy as np
         import pandas as pd
 
         from .postings import decode_terms, isin_sorted
 
-        if not terms or cand_sorted.size == 0:
+        if cand_sorted is not None and (not terms or cand_sorted.size == 0):
             return np.empty(0, dtype=np.int64)
         blocks = self.postings().where(F.col("term").isin(list(terms)))
 
         def kern(key, pdf: pd.DataFrame) -> pd.DataFrame:
-            # blocks whose doc_id range holds no candidate stay undecoded
-            lo = np.searchsorted(cand_sorted, pdf["first_doc_id"].to_numpy(), "left")
-            hi = np.searchsorted(cand_sorted, pdf["last_doc_id"].to_numpy(), "right")
-            # ≤1 block row per doc per term → each masked run is the
-            # term's distinct matched-candidate set
+            if cand_sorted is not None:
+                # blocks whose doc_id range holds no candidate stay undecoded
+                lo = np.searchsorted(cand_sorted, pdf["first_doc_id"].to_numpy(), "left")
+                hi = np.searchsorted(cand_sorted, pdf["last_doc_id"].to_numpy(), "right")
+                pdf = pdf[lo < hi]
+            # ≤1 block row per doc per term → each (masked) run is the
+            # term's distinct matched-doc set
             runs = [
-                ids[isin_sorted(ids, cand_sorted)]
-                for ids, _, _ in decode_terms(pdf[lo < hi]).values()
+                ids if cand_sorted is None else ids[isin_sorted(ids, cand_sorted)]
+                for ids, _, _ in decode_terms(pdf).values()
             ]
             if not runs:
                 return pd.DataFrame({"doc_id": pd.Series([], dtype="int64")})
             ids, counts = np.unique(np.concatenate(runs), return_counts=True)
             return pd.DataFrame({"doc_id": ids[counts >= m]})
 
-        out = (
-            blocks.groupBy("shard")
-            .applyInPandas(kern, "doc_id long")
-            .toPandas()
-        )
-        return out["doc_id"].to_numpy(dtype=np.int64)
+        out = blocks.groupBy("shard").applyInPandas(kern, "doc_id long")
+        if cand_sorted is None:
+            return out
+        return out.toPandas()["doc_id"].to_numpy(dtype=np.int64)
 
     def _meta_cut(self, meta: DataFrame, ids) -> DataFrame:
         """Candidate-sized cut of a corpus metadata frame: isin

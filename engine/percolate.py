@@ -229,7 +229,7 @@ def percolate_counts_from_postings(
     if tombstones is not None:
         # the (tiny) tombstone set rides into the kernel as a sorted
         # drop-mask applied to every decoded run — the same liveDocs
-        # discipline as wand.topk_shard(drop_ids=...)
+        # discipline as wand.topk_terms(drop_ids=...)
         tomb = np.array(
             sorted(r["doc_id"] for r in tombstones.collect()), dtype=np.int64
         )

@@ -36,8 +36,11 @@ rank-safety cross-check.
 The kernel runs on TermBlocks — one (shard, term) posting list as
 numpy block columns, each block decoded at most once and only when the
 kernel needs it — so a batch builds them once per shard (term_blocks)
-and runs topk_terms for every query against them; topk_shard is the
-one-query entry over a BLOCKS_SCHEMA frame.
+and runs topk_terms for every query against them. Every engine surface
+calls term_blocks + topk_terms (IndexReader._shard_topk / _topk_hits).
+topk_shard, the one-query entry over a BLOCKS_SCHEMA frame, is no
+longer called by the engine; like decode_block it stays importable as
+the reference entry of the kernel tests and perfbench/tracing.py.
 """
 
 from __future__ import annotations
@@ -45,9 +48,10 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 
-# decode_block stays importable here: tools that count kernel decodes
-# patch engine.wand.decode_block (the kernel itself decodes through
-# decode_blocks, one varint pass per term and column)
+# decode_block stays importable here, like topk_shard below (the engine
+# calls neither; tests and perfbench use both): tools that count kernel
+# decodes patch engine.wand.decode_block (the kernel itself decodes
+# through decode_blocks, one varint pass per term and column)
 from .postings import (  # noqa: F401
     decode_block, decode_blocks, isin_sorted, score_norm, term_runs,
 )
@@ -210,7 +214,8 @@ def topk_shard(
     """Score one shard's blocks for one query → (doc_ids, scores) of the
     shard-local top-k (unsorted): topk_terms over the TermBlocks of
     ``blocks`` (BLOCKS_SCHEMA columns; terms outside ``weights`` are
-    ignored) built at ``avgdl``."""
+    ignored) built at ``avgdl``. Not called by the engine; the kernel
+    tests and perfbench/tracing.py use it as the one-query entry."""
     return topk_terms(
         term_blocks(blocks, avgdl, weights), weights, k, prune=prune, eps=eps,
         drop_ids=drop_ids, keep_ids=keep_ids, after=after,

@@ -83,9 +83,20 @@ def test_deleted_docs_vanish_with_stale_scores(lifecycle):
 
 def test_all_surfaces_filter_tombstones(lifecycle, queries):
     """Every index-backed surface drops tombstoned docs before its
-    top-k cut: tfidf, title, phrase, proximity, boolean."""
+    top-k cut: tfidf, title, phrase, proximity, boolean, the exhaustive
+    union scoring and the msm / boosting surfaces built on it — those
+    also on their TA candidate path (_body_candidate_pdf)."""
     deleted, del_ids = lifecycle["deleted"], lifecycle["del_ids"]
     q = lifecycle["query"]
+    ta = IndexReader(deleted.spark, deleted.dir)
+    ta._FUSION_TA_MIN_DOCS = 0  # force TA dispatch on the 200-doc fixture
+
+    def ranked(r):
+        return (
+            r.msm_topk(q, 50, min_should_match=1),
+            r.msm_topk(q, 50, min_should_match=2),
+            r.boosting_topk(q, "index", 50),
+        )
 
     for df in (
         deleted.tfidf_topk(q, 50),
@@ -94,9 +105,13 @@ def test_all_surfaces_filter_tombstones(lifecycle, queries):
         deleted.proximity_topk(q, 50),
         deleted.boolean_topk(must="", should=q, must_not="", k=50),
         deleted.snippet_topk(q, 50),
+        deleted.bm25_scores_all(q),
+        *ranked(deleted),
+        *ranked(ta),
     ):
         ids = {r["doc_id"] for r in df.collect()}
         assert not ids & del_ids
+    assert ta.mod_ta_served > 0
 
 
 def test_compacted_equals_fresh_build(lifecycle):

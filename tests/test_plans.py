@@ -150,19 +150,37 @@ def test_spark_scoring_plans_scan_no_dictionary(spark, index_dir, monkeypatch):
     (IndexReader._weights): the Spark-served scoring plans read no
     dictionary file, and the term isin still prunes the postings scan."""
     import engine.index
+    from engine.explain import explain_from_index
     from engine.federated import FederatedReader
     from engine.index import IndexReader
 
     monkeypatch.setattr(engine.index, "LOCAL_SERVE_MAX_BLOCKS", 0)
     r = IndexReader(spark, index_dir)
-    q = " ".join(_two_index_terms(r))
+    terms = _two_index_terms(r)
+    q = " ".join(terms)
     frames = {
         "bm25_topk": r.bm25_topk(q, 10),
         "filtered_topk": r.filtered_topk(q, 10, path_prefix="src/"),
         "bm25_scores_all": r.bm25_scores_all(q),
+        "collapse_topk": r.collapse_topk(q, 10),
         "federated": FederatedReader(spark, [index_dir]).bm25_topk(q, 10),
     }
     assert r.spark_served == 1
+    # explain ranks through bm25_topk (a second Spark-served call here)
+    frames["explain"] = explain_from_index(r, q, 5)
+    # query_string_topk refuses stemmed indexes; the plan shape does not
+    # depend on the analyzer, so a second reader over the same files
+    # reads the query's terms verbatim (they are dictionary stems)
+    u = IndexReader(spark, index_dir)
+    u.manifest["config"]["use_stem"] = False
+    # two terms per clause: a one-term isin folds to EqualTo
+    neg = [
+        row["term"] for row in r.dictionary().where(~F.col("term").isin(terms))
+        .orderBy(F.desc("df"), "term").limit(2).collect()
+    ]
+    frames["query_string_topk"] = u.query_string_topk(
+        f"+{terms[0]} +{terms[1]} -{neg[0]} -{neg[1]}", 10
+    )
     for name, df in frames.items():
         scans = _scans(plan_of(df))
         assert "dictionary" not in scans, (name, scans)
