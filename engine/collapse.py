@@ -135,9 +135,7 @@ def collapse_topk_from_index(reader, query: str, k: int = 10, *,
     collapse_topk (same DuckDB oracle). A query with no in-vocabulary
     term gets the empty frame without a Spark job."""
     if not reader.query_weights(query):
-        return reader.spark.createDataFrame(
-            [], "rank int, doc_id long, repo string, score double"
-        )
+        return reader._empty("rank int, doc_id long, repo string, score double")
     # group-key fetch: INNER join, so AQE broadcasts the (match-set-
     # sized) scored side and doc_stats stays a streamed two-column
     # pruned scan — no corpus-sized exchange (the LEFT-outer metadata

@@ -859,6 +859,17 @@ class IndexReader:
         t = self.tombstones_df()
         return df if t is None else df.join(F.broadcast(t), "doc_id", "left_anti")
 
+    def _empty(self, schema: str) -> DataFrame:
+        """A 0-row frame of the DDL ``schema``, built from an empty Arrow
+        table: it plans as a LocalRelation, so an empty answer launches
+        no Spark job (``createDataFrame([], schema)`` launches one)."""
+        from pyspark.sql.pandas.types import to_arrow_schema
+        from pyspark.sql.types import _parse_datatype_string
+
+        return self.spark.createDataFrame(
+            to_arrow_schema(_parse_datatype_string(schema)).empty_table()
+        )
+
     @property
     def use_stem(self) -> bool:
         return self.manifest["config"]["use_stem"]
@@ -991,7 +1002,7 @@ class IndexReader:
         out_schema = "rank int, doc_id long, n_occ long"
         terms = tokenize(phrase, use_stem=False)
         if not terms:
-            return self.spark.createDataFrame([], out_schema)
+            return self._empty(out_schema)
         pos = self.positions()
         exp = [
             r["term"]
@@ -1091,14 +1102,14 @@ class IndexReader:
         terms = sorted(set(tokenize(query, use_stem=False)))
         out_schema = "rank int, doc_id long, min_span long, snippet string"
         if not terms:
-            return self.spark.createDataFrame([], out_schema)
+            return self._empty(out_schema)
         spans = self._live(proximity_keys_from_positions(self.positions(), terms))
         topk = spans.orderBy(
             F.asc((F.col("key") / _SPAN_PACK).cast("long")), F.asc("doc_id")
         ).limit(k)
         rows = topk.collect()  # k rows — the deliberate driver-side cut
         if not rows:
-            return self.spark.createDataFrame([], out_schema)
+            return self._empty(out_schema)
         picked = {int(r["doc_id"]): int(r["key"]) for r in rows}
         # hive-partition pruning: the kernel knows each winner's shard,
         # so the docstore fetch reads ≤k of n_shards partition dirs
@@ -1263,9 +1274,8 @@ class IndexReader:
         from pyspark.sql import Window
 
         terms = sorted(set(tokenize(query, use_stem=False)))
-        spark = self.spark
         if not terms:
-            return spark.createDataFrame([], "rank int, doc_id long, n_hits long")
+            return self._empty("rank int, doc_id long, n_hits long")
         hits = (
             self.anchor_terms()
             .where(F.col("term").isin(terms))
@@ -1287,9 +1297,8 @@ class IndexReader:
         from pyspark.sql import Window
 
         terms = sorted(set(tokenize(query, use_stem=False)))
-        spark = self.spark
         if not terms:
-            return spark.createDataFrame([], "rank int, doc_id long, n_hits long")
+            return self._empty("rank int, doc_id long, n_hits long")
         hits = (
             self.title_terms()
             .where(F.col("term").isin(terms))
@@ -1319,8 +1328,7 @@ class IndexReader:
 
         from pyspark.sql import Window
 
-        spark = self.spark
-        empty = spark.createDataFrame([], "rank int, doc_id long, cos double")
+        empty = self._empty("rank int, doc_id long, cos double")
         qtf = Counter(tokenize(query, use_stem=self.use_stem))
         if not qtf:
             return empty
@@ -1488,9 +1496,7 @@ class IndexReader:
 
         p = normalize_prefix(prefix)
         if not p:
-            return self.spark.createDataFrame(
-                [], "rank int, doc_id long, score double"
-            )
+            return self._empty("rank int, doc_id long, score double")
         exp = (
             self.dictionary()
             .where(F.col("term").startswith(p))
@@ -1543,14 +1549,12 @@ class IndexReader:
         out_schema = "rank int, doc_id long, score double"
         m = int(min_should_match)
         if not terms or m > len(terms):
-            return self.spark.createDataFrame([], out_schema)
+            return self._empty(out_schema)
 
         # TA serving (see _mod_serve): the msm gate never changes a
         # score (f_max = 1), so candidates from the pruned kernel +
         # the candidate-restricted gate certify whenever the k-th
         # gated score beats the k'-th raw kernel score.
-        from .ranking import _ranked
-
         def assemble(cand_pdf):
             import numpy as np
 
@@ -1566,11 +1570,7 @@ class IndexReader:
             small = self.spark.createDataFrame(
                 pdf, "doc_id long, score double"
             )
-            if round_scores is not None:
-                small = small.select(
-                    "doc_id", F.round("score", round_scores).alias("score")
-                )
-            return _ranked(small, "score", k)
+            return _ranked_cut(small, k, round_scores)
 
         served = self._mod_serve(
             ("msm", m, int(k)), query, k, 1.0, assemble, round_scores
@@ -1599,8 +1599,6 @@ class IndexReader:
         # so f_max = max(1, negative_boost) bounds the modifier and the
         # negative set is probed for CANDIDATES only (block-skip +
         # candidate mask — candidate-mass cost, not neg-posting mass).
-        from .ranking import _ranked
-
         def assemble(cand_pdf):
             import numpy as np
 
@@ -1626,14 +1624,10 @@ class IndexReader:
                     .otherwise(F.lit(1.0))
                 ).alias("score"),
             )
-            if round_scores is not None:
-                out = out.select(
-                    "doc_id", F.round("score", round_scores).alias("score")
-                )
-            return _ranked(out, "score", k)
+            return _ranked_cut(out, k, round_scores)
 
         variant = ("boost", tuple(nterms), float(negative_boost), int(k))
-        try_ta = self._mod_ta_enabled(variant)
+        try_ta = self._ta_enabled(variant)
         if (
             try_ta and nterms
             and float(negative_boost) < self._MOD_TA_FACTOR_FLOOR
@@ -1711,9 +1705,7 @@ class IndexReader:
         ).collect()[0]
         src_id = src_row["src"]
         if src_id is None:
-            return self.spark.createDataFrame(
-                [], "rank int, doc_id long, score double"
-            )
+            return self._empty("rank int, doc_id long, score double")
         n_shards = self.manifest["config"]["n_shards"]
         # the cast matters: xxhash64 is input-type-sensitive and the
         # build hashed the int64 doc_id column — an int32 literal would
@@ -1767,9 +1759,7 @@ class IndexReader:
             raise ValueError("mlt_text serves unstemmed indexes only")
         tf = Counter(tokenize(text, use_stem=False))
         if not tf:
-            return self.spark.createDataFrame(
-                [], "rank int, doc_id long, score double"
-            )
+            return self._empty("rank int, doc_id long, score double")
         qdf = self.spark.createDataFrame(
             sorted((t, int(c)) for t, c in tf.items()), "term string, tf long"
         )
@@ -1826,7 +1816,7 @@ class IndexReader:
         qtf = Counter(tokenize(query, use_stem=self.use_stem))
         weights = self._weights({"": qtf})[0]
         if not weights[""]:
-            return self.spark.createDataFrame([], "rank int, doc_id long, score double")
+            return self._empty("rank int, doc_id long, score double")
         keep = self.doc_stats()
         if repo is not None:
             keep = keep.where(F.col("repo") == repo)
@@ -1910,7 +1900,7 @@ class IndexReader:
             for qid, text in sorted(queries.items())
         }
         if not qterms:
-            return self.spark.createDataFrame([], "query_id string, n_hits long")
+            return self._empty("query_id string, n_hits long")
         qids_df = self.spark.createDataFrame(
             [(q,) for q in sorted(qterms)], "query_id string"
         )
@@ -1925,9 +1915,7 @@ class IndexReader:
                     self.dictionary().select("term", "df"), "term"
                 ).select("query_id", F.col("df").cast("long").alias("n_hits"))
             else:
-                counts = self.spark.createDataFrame(
-                    [], "query_id string, n_hits long"
-                )
+                counts = self._empty("query_id string, n_hits long")
         else:
             all_terms = sorted({t for ts in qterms.values() for t in ts})
             blocks = self.postings().where(F.col("term").isin(all_terms))
@@ -2040,7 +2028,7 @@ class IndexReader:
             spark, self.dictionary(), parsed, max_expansions
         )
         if not qtf_map:
-            return spark.createDataFrame([], out_schema)
+            return self._empty(out_schema)
         for fld, _ in parsed.filters:
             if fld == "lang":
                 raise ValueError(
@@ -2321,14 +2309,14 @@ class IndexReader:
         qtf = Counter(tokenize(query, use_stem=self.use_stem))
         weights = self._weights({"": qtf})[0]
         if not weights[""]:
-            return self.spark.createDataFrame([], "doc_id long, score double")
+            return self._empty("doc_id long, score double")
         return self._shard_topk(
             weights, 1 << 31, **self._kernel_kw(False, None)
         ).select("doc_id", "score")
 
     def _body_scores_once(self, query: str) -> DataFrame:
         """bm25_scores_all behind a lazy localCheckpoint: the exhaustive
-        fusion paths consume the body frame TWICE (max-normalization agg
+        fusion path consumes the body frame TWICE (max-normalization agg
         + the normalized join), and Spark's ReuseExchange only reuses
         the shuffle BELOW the Python kernel — without the checkpoint the
         postings decode + scoring kernel runs once per consumer. The
@@ -2341,17 +2329,20 @@ class IndexReader:
 
     # ---- fusion serving: rank-safe candidate generation (TA) ----------
     #
-    # The exhaustive fusion paths below score EVERY body-matching doc
-    # per query (bm25_scores_all) just to max-normalize — a corpus-
-    # sized job per query at 100 TB. The serving path instead builds a
+    # The exhaustive fusion path (_fusion_exhaustive) scores EVERY
+    # body-matching doc per query (bm25_scores_all) just to
+    # max-normalize — a corpus-sized job per query at 100 TB. The
+    # serving path (_fusion_serve) instead builds a
     # provably sufficient candidate set (Fagin's Threshold Algorithm
     # shape, adapted to this engine's per-shard block-max kernel):
     #
     #   C = K ∪ T ∪ P
     #   K = per-shard body top-k' (k' = max(4k, 64)) with eps slack
-    #   T = ALL title-matching docs (exact body scores via keep_ids)
+    #   T = ALL live title-matching docs (_title_scores)
     #   P = top-k'' docs of each static prior artifact (cached once
-    #       per reader — the artifact never changes under a reader)
+    #       per reader — the artifact never changes under a reader;
+    #       like N, avgdl and df it counts deleted docs until
+    #       compaction, which only loosens the bound)
     #
     # Exactness: every doc OUTSIDE C has body < θ_b − eps (kernel
     # guarantee: survivors per shard are everything ≥ shard-k'-th −
@@ -2364,10 +2355,10 @@ class IndexReader:
     # the top-k over C is the top-k over the full set — returned.
     # Otherwise _fusion_serve returns None and the caller falls back
     # to the exhaustive path: never wrong, only slower. Scores are
-    # BIT-identical to the exhaustive path (both sum each doc's terms in
-    # wand.topk_terms' shard-independent (-weight, term) order, under
-    # the same Spark expression tree), so the DuckDB oracles pinned on
-    # the recompute formula hold unchanged.
+    # BIT-identical to the exhaustive path: both sum each doc's terms in
+    # wand.topk_terms' shard-independent (-weight, term) order, and both
+    # fuse through the one expression builder _fusion_ranked, so the
+    # DuckDB oracles pinned on the recompute formula hold unchanged.
 
     _FUSION_TA_KPRIOR = 1024  # prior-top depth cached per reader
     _FUSION_TA_KBODY_MIN = 64  # body candidate depth floor (k' = max(4k, this))
@@ -2390,25 +2381,57 @@ class IndexReader:
     # BENCH/BASELINE.md fusion A/B), so small indexes serve exhaustive.
     _FUSION_TA_MIN_DOCS = 100_000
 
-    def _ta_miss(self, variant):
-        """Record a post-work TA fallback (the probe ran but could not
-        certify exactness). After _FUSION_TA_FAIL_LIMIT CONSECUTIVE
-        misses the variant is disabled on this reader, so steady-state
-        queries dispatch straight to exhaustive at zero probe cost —
-        the distribution property that defeats the bound (flat prior
-        tail, title-heavy corpus) is per-index, not per-query. A served
-        query resets the count. Returns None (the fallback sentinel)."""
+    def _ta_enabled(self, variant) -> bool:
+        """The no-job TA dispatch gate of fusion and every modifier
+        surface: the index holds ≥ _FUSION_TA_MIN_DOCS docs (below it
+        the exhaustive job is cheaper than the TA overhead) and
+        ``variant`` is not adaptively disabled on this reader
+        (_ta_tally), so surfaces spend no lookup job on a variant that
+        will not be probed."""
+        return (
+            self.manifest["stats"]["n_docs"] >= self._FUSION_TA_MIN_DOCS
+            and variant not in self._fusion_ta_off
+        )
+
+    def _ta_tally(self, family: str, variant, served: bool):
+        """Per-variant TA bookkeeping of fusion (``family`` "fusion")
+        and the modifiers ("mod"), which share the per-variant state
+        under disjoint variant keys. A served query counts in
+        ``<family>_ta_served`` and resets the variant's miss count. A
+        post-work miss (the probe ran but could not certify exactness)
+        counts against the variant: after _FUSION_TA_FAIL_LIMIT
+        CONSECUTIVE misses it is disabled on this reader, so
+        steady-state queries dispatch straight to exhaustive at zero
+        probe cost — the distribution property that defeats the bound
+        (flat prior tail, title-heavy corpus, a crushing decay) is
+        per-index, not per-query. Returns None (the fallback
+        sentinel)."""
+        stats = self._fusion_ta_stats.setdefault(variant, [0, 0])
+        if served:
+            stats[0] += 1
+            counter = f"{family}_ta_served"
+            setattr(self, counter, getattr(self, counter) + 1)
+            self._fusion_ta_fails.pop(variant, None)
+            return None
+        stats[1] += 1
         n = self._fusion_ta_fails.get(variant, 0) + 1
         self._fusion_ta_fails[variant] = n
-        self._fusion_ta_stats.setdefault(variant, [0, 0])[1] += 1
         if n >= self._FUSION_TA_FAIL_LIMIT:
             self._fusion_ta_off.add(variant)
         return None
 
-    def _ta_hit(self, variant) -> None:
-        self.fusion_ta_served += 1
-        self._fusion_ta_stats.setdefault(variant, [0, 0])[0] += 1
-        self._fusion_ta_fails.pop(variant, None)
+    def _title_scores(self, terms: list[str]) -> DataFrame:
+        """Fusion's title signal: (doc_id, title_score) of every live
+        doc whose title holds ≥1 of the distinct unstemmed query
+        ``terms``, title_score = matched / |terms|. The one read behind
+        the TA set T and the exhaustive full-outer join, so both drop
+        the tombstones."""
+        return self._live(
+            self.title_terms()
+            .where(F.col("term").isin(terms))
+            .groupBy("doc_id")
+            .agg((F.count("*") / F.lit(float(len(terms)))).alias("title_score"))
+        )
 
     def _title_df(self, terms: list[str]) -> int:
         """Σ per-term title document frequency — an upper bound on |T|
@@ -2529,23 +2552,20 @@ class IndexReader:
 
         from collections import Counter
 
-        from .ranking import _ranked
         from .textops import ROUND
 
         spark = self.spark
-        if self.manifest["stats"]["n_docs"] < self._FUSION_TA_MIN_DOCS:
-            return None  # cost-based dispatch: exhaustive wins when small
         variant = (w_body, w_title, tuple(p[0] for p in priors))
-        if variant in self._fusion_ta_off:
+        if not self._ta_enabled(variant):
+            # cost-based dispatch (exhaustive wins when small), or
             # adaptively learned: this variant's straddler set blew the
             # cap once, or it missed the TA bound _FUSION_TA_FAIL_LIMIT
             # queries in a row (flat prior tail → TA cannot prune), so
             # later queries dispatch straight to exhaustive at zero cost
             return None
         title_q = sorted(set(tokenize(query, use_stem=False)))
-        n_q = len(title_q)
-        if n_q == 0:
-            return spark.createDataFrame([], "rank int, doc_id long, score double")
+        if not title_q:
+            return self._empty("rank int, doc_id long, score double")
         qtf = Counter(tokenize(query, use_stem=self.use_stem))
         qtf_map = {t: float(c) for t, c in qtf.items()}
 
@@ -2555,17 +2575,12 @@ class IndexReader:
         if self._title_df(title_q) > self._FUSION_TA_TITLE_HOT:
             return None
 
-        # T: every title-matching doc (complete — outside docs have
-        # title_score exactly 0), driver-cut behind a documented gate
-        title_pdf = (
-            self.title_terms()
-            .where(F.col("term").isin(title_q))
-            .groupBy("doc_id")
-            .agg((F.count("*") / F.lit(float(n_q))).alias("title_score"))
-            .toPandas()
-        )
+        # T: every live title-matching doc (complete — outside docs
+        # have title_score exactly 0), driver-cut behind a documented gate
+        title_pdf = self._title_scores(title_q).toPandas()
         if len(title_pdf) > self._FUSION_TITLE_CAP:
-            return self._ta_miss(variant)  # paid the title collect
+            # paid the title collect
+            return self._ta_tally("fusion", variant, False)
 
         # P: static prior tops (cached per reader)
         prior_info = []  # (name, weight, df, value_col, kind, ids, kth, mx)
@@ -2625,7 +2640,7 @@ class IndexReader:
             rows = self._fusion_assemble_rank(
                 body_pdf, title_pdf, prior_info, k, w_body, w_title
             )
-            self._ta_hit(variant)
+            self._ta_tally("fusion", variant, True)
             return spark.createDataFrame(rows, "rank int, doc_id long, score double")
 
         # ---- staged exact ranking (body got cut somewhere) -----------
@@ -2638,7 +2653,7 @@ class IndexReader:
             body_pdf, title_pdf[in_e0], prior_info, k, w_body, w_title
         )
         if len(rows) < k or max_b is None:
-            return self._ta_miss(variant)
+            return self._ta_tally("fusion", variant, False)
         theta_low = float(rows[-1]["score"])
 
         # Round 2: random-access the straddlers — title docs outside E0
@@ -2669,7 +2684,7 @@ class IndexReader:
             # _FUSION_TA_FAIL_LIMIT consecutive blowups the variant is
             # disabled on this reader and serves exhaustive at zero
             # probe cost (one hot query can't kill TA forever).
-            return self._ta_miss(variant)
+            return self._ta_tally("fusion", variant, False)
         if straddle.any():
             s_ids = np.unique(t_ids[straddle])
             body_s = self._body_candidate_pdf(
@@ -2685,45 +2700,36 @@ class IndexReader:
                 body_pdf, title_pdf[in_final], prior_info, k, w_body, w_title
             )
             if len(rows) < k:
-                return self._ta_miss(variant)
+                return self._ta_tally("fusion", variant, False)
 
         # ---- TA stopping bound for docs outside all candidate sets ---
         theta_fused = float(rows[-1]["score"])
         ub_out = w_body * (theta_b - eps) / max_b + prior_tail
         if ub_out >= theta_fused - 2.0 * 10.0 ** (-ROUND):
-            return self._ta_miss(variant)
-        self._ta_hit(variant)
+            return self._ta_tally("fusion", variant, False)
+        self._ta_tally("fusion", variant, True)
         return spark.createDataFrame(rows, "rank int, doc_id long, score double")
 
     def _fusion_assemble_rank(self, body_pdf, title_pdf, prior_info, k: int,
                               w_body: float, w_title: float) -> list:
-        """Build the pinned fused expression over the given body/title
-        rows (small, driver-cut), LEFT-join exact prior values for the
-        frame's ids, rank, and collect k rows. The expression tree is
-        the exhaustive path's, so values are bit-identical."""
+        """TA's assembly: the given body/title rows (small, driver-cut)
+        as frames, each prior broadcast-cut to their ids, ranked by
+        _fusion_ranked and collected (k rows)."""
         import numpy as np
         import pandas as pd
 
-        from .ranking import _ranked
-        from .textops import ROUND
-
         spark = self.spark
-        max_b = float(body_pdf["score"].max()) if len(body_pdf) else None
         if len(body_pdf):
-            body_sdf = spark.createDataFrame(body_pdf, "doc_id long, score double")
-            body_n = body_sdf.select(
-                "doc_id", (F.col("score") / F.lit(max_b)).alias("body_score")
-            )
+            max_b = float(body_pdf["score"].max())
+            body_n = spark.createDataFrame(
+                body_pdf, "doc_id long, score double"
+            ).select("doc_id", (F.col("score") / F.lit(max_b)).alias("body_score"))
         else:
-            body_n = spark.createDataFrame([], "doc_id long, body_score double")
+            body_n = self._empty("doc_id long, body_score double")
         title_sdf = (
             spark.createDataFrame(title_pdf, "doc_id long, title_score double")
             if len(title_pdf)
-            else spark.createDataFrame([], "doc_id long, title_score double")
-        )
-        fused = body_n.join(title_sdf, "doc_id", "full_outer")
-        expr = w_body * F.coalesce("body_score", F.lit(0.0)) + w_title * F.coalesce(
-            "title_score", F.lit(0.0)
+            else self._empty("doc_id long, title_score double")
         )
         all_ids = np.unique(
             np.concatenate([
@@ -2731,29 +2737,47 @@ class IndexReader:
                 title_pdf["doc_id"].to_numpy(dtype=np.int64),
             ])
         )
-        if prior_info and all_ids.size:
+        priors = []
+        if all_ids.size:
             ids_sdf = spark.createDataFrame(
                 pd.DataFrame({"doc_id": all_ids}), "doc_id long"
             )
-            for name, w, pdf_df, vcol, kind, _ids, _kth, mx in prior_info:
-                cut = pdf_df.join(F.broadcast(ids_sdf), "doc_id")
-                col = f"{name}_score"
-                if kind == "linear":
-                    cut = cut.select(
-                        "doc_id", (F.col(vcol) / F.lit(mx)).alias(col)
-                    )
-                else:  # log1p
-                    cut = cut.select(
-                        "doc_id",
-                        (
-                            F.log(F.lit(1.0) + F.col(vcol))
-                            / F.log(F.lit(1.0) + F.lit(mx))
-                        ).alias(col),
-                    )
-                fused = fused.join(F.broadcast(cut), "doc_id", "left")
-                expr = expr + w * F.coalesce(col, F.lit(0.0))
-        fused = fused.select("doc_id", F.round(expr, ROUND).alias("score"))
-        return _ranked(fused, "score", k).collect()
+            priors = [
+                (name, w, F.broadcast(pdf_df.join(F.broadcast(ids_sdf), "doc_id")),
+                 vcol, kind, mx)
+                for name, w, pdf_df, vcol, kind, _ids, _kth, mx in prior_info
+            ]
+        return self._fusion_ranked(
+            body_n, title_sdf, priors, k, w_body, w_title
+        ).collect()
+
+    def _fusion_ranked(self, body: DataFrame, title: DataFrame, priors,
+                       k: int, w_body: float, w_title: float) -> DataFrame:
+        """The one fused expression of every fusion path → ranked top-k
+        (rank, doc_id, score): ``body`` (doc_id, body_score = bm25/max)
+        full-outer-joined with ``title`` (doc_id, title_score), each
+        prior (name, weight, frame, value_col, kind, max) LEFT-joined
+        and normalized — 'linear' v/max, 'log1p' log1p(v)/log1p(max) —
+        then the pinned Σ w·coalesce(signal, 0) rounded at ROUND
+        (engine/ranking's formulas; their recompute paths are the
+        oracles). TA passes candidate-sized frames and broadcast prior
+        cuts, the exhaustive path the full frames: one expression tree,
+        so the two agree bit for bit by construction."""
+        from .textops import ROUND
+
+        fused = body.join(title, "doc_id", "full_outer")
+        expr = w_body * F.coalesce("body_score", F.lit(0.0)) + w_title * F.coalesce(
+            "title_score", F.lit(0.0)
+        )
+        for name, w, frame, vcol, kind, mx in priors:
+            col = f"{name}_score"
+            if kind == "linear":
+                norm = F.col(vcol) / F.lit(mx)
+            else:  # log1p
+                norm = F.log(F.lit(1.0) + F.col(vcol)) / F.log(F.lit(1.0) + F.lit(mx))
+            fused = fused.join(frame.select("doc_id", norm.alias(col)), "doc_id", "left")
+            expr = expr + w * F.coalesce(col, F.lit(0.0))
+        return _ranked_cut(fused.select("doc_id", expr.alias("score")), k, ROUND)
 
     # ---- modifier serving: rank-safe TA for doc-value modifiers -------
     #
@@ -2803,32 +2827,6 @@ class IndexReader:
     # undemoted and TA is attempted even with a deep negative_boost
     _MOD_TA_NEG_RARE = 0.05
 
-    def _mod_ta_enabled(self, variant) -> bool:
-        """The no-job dispatch gates shared by every modifier surface
-        (mirrored inside _mod_serve; exposed so surfaces can avoid
-        spending lookup jobs on a disabled variant)."""
-        return (
-            self.manifest["stats"]["n_docs"] >= self._FUSION_TA_MIN_DOCS
-            and variant not in self._fusion_ta_off
-        )
-
-    def _mod_miss(self, variant):
-        """Post-work modifier-TA fallback; disable after the same
-        consecutive-miss limit as fusion (shared _fusion_ta_off set,
-        disjoint variant keys)."""
-        self.mod_ta_fallback += 1
-        n = self._fusion_ta_fails.get(variant, 0) + 1
-        self._fusion_ta_fails[variant] = n
-        self._fusion_ta_stats.setdefault(variant, [0, 0])[1] += 1
-        if n >= self._FUSION_TA_FAIL_LIMIT:
-            self._fusion_ta_off.add(variant)
-        return None
-
-    def _mod_hit(self, variant) -> None:
-        self.mod_ta_served += 1
-        self._fusion_ta_stats.setdefault(variant, [0, 0])[0] += 1
-        self._fusion_ta_fails.pop(variant, None)
-
     def _meta_range(self, key: str, meta: DataFrame, col: str):
         """Cached (min, max) of a STATIC metadata column — one narrow
         2-agg scan per reader lifetime, bounds the decay/fvf factor."""
@@ -2866,13 +2864,11 @@ class IndexReader:
 
         spark = self.spark
         out_schema = "rank int, doc_id long, score double"
-        if self.manifest["stats"]["n_docs"] < self._FUSION_TA_MIN_DOCS:
-            return None  # cost-based dispatch: exhaustive wins when small
-        if variant in self._fusion_ta_off:
+        if not self._ta_enabled(variant):
             return None
         qtf = Counter(tokenize(query, use_stem=self.use_stem))
         if not qtf:
-            return spark.createDataFrame([], out_schema)
+            return self._empty(out_schema)
         qtf_map = {t: float(c) for t, c in qtf.items()}
         margin = (
             2.0 * 10.0 ** (-round_scores) if round_scores is not None else 0.0
@@ -2884,15 +2880,15 @@ class IndexReader:
         for k_body in depths:
             cand = self._body_candidate_pdf(qtf_map, k_body, 0.0, None)
             if not len(cand):
-                self._mod_hit(variant)
-                return spark.createDataFrame([], out_schema)
+                self._ta_tally("mod", variant, True)
+                return self._empty(out_schema)
             sc = cand["score"].to_numpy()
             outside_possible = sc.size >= k_body
             rows = assemble(cand[["doc_id", "score"]]).collect()
             if not outside_possible:
                 # no shard cut anything → C is every matching doc and
                 # the assembly is exact over the complete match set
-                self._mod_hit(variant)
+                self._ta_tally("mod", variant, True)
                 return spark.createDataFrame(rows, out_schema)
             if len(rows) < k:
                 continue  # gate/demotion starved the page; go deeper
@@ -2901,9 +2897,10 @@ class IndexReader:
             )
             theta = float(rows[-1]["score"])
             if theta_b * f_max < theta - margin:
-                self._mod_hit(variant)
+                self._ta_tally("mod", variant, True)
                 return spark.createDataFrame(rows, out_schema)
-        return self._mod_miss(variant)
+        self.mod_ta_fallback += 1
+        return self._ta_tally("mod", variant, False)
 
     def _cand_match_ids(self, terms, cand_sorted, m: int):
         """doc_ids matching ≥ ``m`` distinct ``terms``, from the
@@ -2965,6 +2962,36 @@ class IndexReader:
         )
         return meta.join(F.broadcast(ids_sdf), "doc_id")
 
+    def _factor_topk(self, variant, query: str, meta: DataFrame, k: int,
+                     value_col: str, factor, f_max: float, f_lo: float,
+                     round_scores: int | None) -> DataFrame:
+        """The one seam of the doc-value factor modifiers: BM25 ×
+        ``factor`` (a Column over ``value_col``, read as ``_fs_value``)
+        → ranked top-k. ``f_max`` (ulp-inflated) bounds the factor over
+        the cached field range and ``f_lo`` is its floor there. TA
+        serving (_mod_serve) when the envelope f_lo/f_max clears
+        _MOD_TA_FACTOR_FLOOR, else — or on a miss — the exhaustive
+        union scoring × factor over the narrow metadata projection (the
+        oracle formula, corpus-match-sized). Both paths run one
+        rescoring expression."""
+
+        def rescored(bm: DataFrame, values: DataFrame) -> DataFrame:
+            return bm.join(
+                values.select("doc_id", F.col(value_col).alias("_fs_value")),
+                "doc_id",
+            ).select("doc_id", (F.col("score") * factor).alias("score"))
+
+        def assemble(cand_pdf):
+            small = self.spark.createDataFrame(cand_pdf, "doc_id long, score double")
+            cut = F.broadcast(self._meta_cut(meta, cand_pdf["doc_id"]))
+            return _ranked_cut(rescored(small, cut), k, round_scores)
+
+        if f_max > 0.0 and f_lo >= self._MOD_TA_FACTOR_FLOOR * f_max:
+            served = self._mod_serve(variant, query, k, f_max, assemble, round_scores)
+            if served is not None:
+                return served
+        return _ranked_cut(rescored(self.bm25_scores_all(query), meta), k, round_scores)
+
     def function_score_topk(
         self, query: str, meta: DataFrame, k: int = 10, *,
         value_col: str = "n_chars", origin: float, scale: float,
@@ -2976,12 +3003,11 @@ class IndexReader:
         boost_mode=multiply) served from the index —
         engine/funcscore.function_score_topk semantics against the SAME
         DuckDB oracle (function_score_sql). ``meta`` is a corpus frame
-        carrying doc_id + ``value_col``. TA serving with exhaustive
-        fallback: every decay is monotone in |v − origin|, so f_max is
-        the factor at the field range's NEAREST approach to origin and
-        the dispatch envelope f_lo the factor at the FARTHEST."""
+        carrying doc_id + ``value_col``. Every decay is monotone in
+        |v − origin|, so f_max is the factor at the field range's
+        NEAREST approach to origin and the dispatch envelope f_lo the
+        factor at the FARTHEST (_factor_topk)."""
         from .funcscore import decay_factor_at, decay_factor_col
-        from .ranking import _ranked
 
         variant = ("fs", decay_fn, value_col, float(origin), float(scale),
                    float(decay), int(k))
@@ -2989,23 +3015,6 @@ class IndexReader:
             decay_fn, F.col("_fs_value"), float(origin), float(scale),
             float(decay),
         )
-
-        def assemble(cand_pdf):
-            small = self.spark.createDataFrame(
-                cand_pdf, "doc_id long, score double"
-            )
-            cut = self._meta_cut(meta, cand_pdf["doc_id"]).select(
-                "doc_id", F.col(value_col).alias("_fs_value")
-            )
-            out = small.join(F.broadcast(cut), "doc_id").select(
-                "doc_id", (F.col("score") * factor).alias("score")
-            )
-            if round_scores is not None:
-                out = out.select(
-                    "doc_id", F.round("score", round_scores).alias("score")
-                )
-            return _ranked(out, "score", k)
-
         lo, hi = self._meta_range(range_key or value_col, meta, value_col)
         d_near = (
             0.0 if lo <= origin <= hi
@@ -3015,29 +3024,9 @@ class IndexReader:
         # inflate by an ulp guard: the per-doc factor is JVM libm, the
         # bound is CPython libm
         f_max = decay_factor_at(decay_fn, d_near, scale, decay) * (1.0 + 1e-9)
-        # factor envelope at the range's FARTHEST approach to origin —
-        # the dispatch gate (class docstring at _MOD_TA_FACTOR_FLOOR)
         f_lo = decay_factor_at(decay_fn, d_far, scale, decay)
-        served = (
-            self._mod_serve(variant, query, k, f_max, assemble, round_scores)
-            if f_max > 0.0 and f_lo >= self._MOD_TA_FACTOR_FLOOR * f_max
-            else None
-        )
-        if served is not None:
-            return served
-
-        # exhaustive fallback: union scoring × factor over the narrow
-        # metadata projection (the oracle formula, corpus-match-sized)
-        bm = self.bm25_scores_all(query)
-        out = bm.join(
-            meta.select("doc_id", F.col(value_col).alias("_fs_value")),
-            "doc_id",
-        ).select("doc_id", (F.col("score") * factor).alias("score"))
-        if round_scores is not None:
-            out = out.select(
-                "doc_id", F.round("score", round_scores).alias("score")
-            )
-        return _ranked(out, "score", k)
+        return self._factor_topk(variant, query, meta, k, value_col, factor,
+                                 f_max, f_lo, round_scores)
 
     def field_value_factor_topk(
         self, query: str, meta: DataFrame, k: int = 10, *,
@@ -3047,136 +3036,101 @@ class IndexReader:
         """ES field_value_factor (ln1p modifier) served from the index
         — engine/funcscore.field_value_factor_topk semantics, oracle
         field_value_factor_sql. ln(1+factor·max(v,0)) is monotone in v,
-        so f_max is the modifier at the cached field max."""
+        so f_max is the modifier at the cached field max and f_lo at
+        the field min (_factor_topk)."""
         import math
 
         from .funcscore import ln1p_factor_col
-        from .ranking import _ranked
 
         variant = ("fvf", value_col, float(factor), int(k))
-        fcol = ln1p_factor_col(F.col("_fs_value"), float(factor))
-
-        def assemble(cand_pdf):
-            small = self.spark.createDataFrame(
-                cand_pdf, "doc_id long, score double"
-            )
-            cut = self._meta_cut(meta, cand_pdf["doc_id"]).select(
-                "doc_id", F.col(value_col).alias("_fs_value")
-            )
-            out = small.join(F.broadcast(cut), "doc_id").select(
-                "doc_id", (F.col("score") * fcol).alias("score")
-            )
-            if round_scores is not None:
-                out = out.select(
-                    "doc_id", F.round("score", round_scores).alias("score")
-                )
-            return _ranked(out, "score", k)
-
         lo, hi = self._meta_range(range_key or value_col, meta, value_col)
         f_max = math.log1p(float(factor) * max(hi, 0.0)) * (1.0 + 1e-9)
-        # ln1p is monotone: envelope floor sits at the field minimum —
-        # the dispatch gate (class docstring at _MOD_TA_FACTOR_FLOOR)
         f_lo = math.log1p(float(factor) * max(lo, 0.0))
-        served = (
-            self._mod_serve(variant, query, k, f_max, assemble, round_scores)
-            if f_max > 0.0 and f_lo >= self._MOD_TA_FACTOR_FLOOR * f_max
-            else None
+        return self._factor_topk(
+            variant, query, meta, k, value_col,
+            ln1p_factor_col(F.col("_fs_value"), float(factor)),
+            f_max, f_lo, round_scores,
         )
-        if served is not None:
-            return served
 
-        bm = self.bm25_scores_all(query)
-        out = bm.join(
-            meta.select("doc_id", F.col(value_col).alias("_fs_value")),
-            "doc_id",
-        ).select("doc_id", (F.col("score") * fcol).alias("score"))
-        if round_scores is not None:
-            out = out.select(
-                "doc_id", F.round("score", round_scores).alias("score")
-            )
-        return _ranked(out, "score", k)
+    def _fusion_spec(self, variant: str):
+        """The one table of `/search` fusion variants — "fusion" (body +
+        title), "pr" (+ PageRank), "pv" (+ PageRank + pageviews) — →
+        (w_body, w_title, priors), a prior being (name, weight, artifact
+        frame, value_col, kind) with kind 'linear' or 'log1p'
+        (_fusion_ranked). The weights are engine/ranking's pinned
+        formulas. Only a variant with priors touches their lazily
+        materialized artifacts."""
+        from . import ranking as R
+
+        w_body, w_title, priors = {
+            "fusion": (R.FUSE_W_BODY, R.FUSE_W_TITLE, ()),
+            "pr": (R.FUSE3_W_BODY, R.FUSE3_W_TITLE, (
+                ("pr", R.FUSE3_W_PR, self.pagerank_df, "pr", "linear"),
+            )),
+            "pv": (R.FUSE4_W_BODY, R.FUSE4_W_TITLE, (
+                ("pr", R.FUSE4_W_PR, self.pagerank_df, "pr", "linear"),
+                ("pv", R.FUSE4_W_PV, self.pageviews_df, "views", "log1p"),
+            )),
+        }[variant]
+        return w_body, w_title, tuple(
+            (name, w, artifact(), vcol, kind)
+            for name, w, artifact, vcol, kind in priors
+        )
+
+    def _fusion_topk(self, variant: str, query: str, k: int) -> DataFrame:
+        """TA candidate serving (_fusion_serve) of a _fusion_spec
+        variant; when it declines — a dispatch gate or an uncertified
+        bound, counted in fusion_ta_fallback — the exhaustive path.
+        Identical results either way, by the rank-safety argument
+        above and the shared _fusion_ranked expression."""
+        out = self._fusion_serve(query, k, *self._fusion_spec(variant))
+        if out is None:
+            self.fusion_ta_fallback += 1
+            out = self._fusion_exhaustive(variant, query, k)
+        return out
 
     def fusion_topk(self, query: str, k: int = 10) -> DataFrame:
-        """Index-backed `/search` (J4): TA candidate serving with
-        exhaustive fallback — identical results to
-        _fusion_topk_exhaustive (the oracle formula) by the rank-safety
-        argument above."""
-        from .ranking import FUSE_W_BODY, FUSE_W_TITLE
-
-        out = self._fusion_serve(query, k, FUSE_W_BODY, FUSE_W_TITLE, ())
-        if out is not None:
-            return out
-        self.fusion_ta_fallback += 1
-        return self._fusion_topk_exhaustive(query, k)
+        """Index-backed `/search` (J4): max-normalized BM25 body score
+        + title hit ratio (_fusion_topk)."""
+        return self._fusion_topk("fusion", query, k)
 
     def fusion_pr_topk(self, query: str, k: int = 10) -> DataFrame:
-        """3-signal `/search` via TA serving (body + title + PageRank
-        prior), exhaustive fallback when the prior tail keeps the bound
-        open."""
-        from .ranking import FUSE3_W_BODY, FUSE3_W_PR, FUSE3_W_TITLE
-
-        out = self._fusion_serve(
-            query, k, FUSE3_W_BODY, FUSE3_W_TITLE,
-            (("pr", FUSE3_W_PR, self.pagerank_df(), "pr", "linear"),),
-        )
-        if out is not None:
-            return out
-        self.fusion_ta_fallback += 1
-        return self._fusion_pr_topk_exhaustive(query, k)
+        """3-signal `/search`: body + title + PageRank prior
+        (_fusion_topk)."""
+        return self._fusion_topk("pr", query, k)
 
     def fusion_pv_topk(self, query: str, k: int = 10) -> DataFrame:
-        """4-signal `/search` via TA serving (body + title + PageRank +
-        pageviews), exhaustive fallback."""
-        from .ranking import FUSE4_W_BODY, FUSE4_W_PR, FUSE4_W_PV, FUSE4_W_TITLE
+        """4-signal `/search` (the reference's full set): body + title
+        + PageRank + pageviews (_fusion_topk)."""
+        return self._fusion_topk("pv", query, k)
 
-        out = self._fusion_serve(
-            query, k, FUSE4_W_BODY, FUSE4_W_TITLE,
-            (
-                ("pr", FUSE4_W_PR, self.pagerank_df(), "pr", "linear"),
-                ("pv", FUSE4_W_PV, self.pageviews_df(), "views", "log1p"),
-            ),
-        )
-        if out is not None:
-            return out
-        self.fusion_ta_fallback += 1
-        return self._fusion_pv_topk_exhaustive(query, k)
-
-    def _fusion_topk_exhaustive(self, query: str, k: int = 10) -> DataFrame:
-        """Index-backed `/search` (J4): weighted fusion of max-normalized
-        BM25 body score and title hit-ratio — the same pinned formula as
-        engine/ranking.fusion_topk (its recompute path is the oracle).
-        BM25 terms follow the index's stemming config; title terms are
-        unstemmed (the title table is built unstemmed), mirroring the
-        recompute path's per-field tokenization."""
-        from .ranking import FUSE_W_BODY, FUSE_W_TITLE, _ranked
-        from .textops import ROUND
-
+    def _fusion_exhaustive(self, variant: str, query: str, k: int = 10) -> DataFrame:
+        """Exhaustive `/search` fusion of a _fusion_spec variant: every
+        live body-matching doc scored (bm25_scores_all), max-normalized,
+        and fused with the full title and prior frames by
+        _fusion_ranked. BM25 terms follow the index's stemming config;
+        title terms are unstemmed (the title table is built unstemmed),
+        mirroring the recompute path's per-field tokenization.
+        Candidates = body OR title matches; priors are LEFT-joined, with
+        their maxes from the reader's _prior_top cache (the top-1 of the
+        sorted prior IS the exact max, the same float as an agg — one
+        TakeOrderedAndProject per reader lifetime instead of a
+        corpus-sized max() scan per query)."""
+        w_body, w_title, priors = self._fusion_spec(variant)
         terms = sorted(set(tokenize(query, use_stem=False)))
-        n_q = len(terms)
-        if n_q == 0:
-            return self.spark.createDataFrame(
-                [], "rank int, doc_id long, score double"
-            )
+        if not terms:
+            return self._empty("rank int, doc_id long, score double")
         body = self._body_scores_once(query)
         body_max = body.agg(F.max("score").alias("max_bm25"))
         body_n = body.crossJoin(F.broadcast(body_max)).select(
             "doc_id", (F.col("score") / F.col("max_bm25")).alias("body_score")
         )
-        title = (
-            self.title_terms()
-            .where(F.col("term").isin(terms))
-            .groupBy("doc_id")
-            .agg((F.count("*") / F.lit(float(n_q))).alias("title_score"))
+        return self._fusion_ranked(
+            body_n, self._title_scores(terms),
+            [(name, w, df, vcol, kind, self._prior_top(name, df, vcol)[2])
+             for name, w, df, vcol, kind in priors],
+            k, w_body, w_title,
         )
-        fused = body_n.join(title, "doc_id", "full_outer").select(
-            "doc_id",
-            F.round(
-                FUSE_W_BODY * F.coalesce("body_score", F.lit(0.0))
-                + FUSE_W_TITLE * F.coalesce("title_score", F.lit(0.0)),
-                ROUND,
-            ).alias("score"),
-        )
-        return _ranked(fused, "score", k)
 
     def kmv_sketches_df(self, k: int = 64) -> DataFrame:
         """(term, h) bottom-k KMV sketch rows per term — a tiny
@@ -3292,56 +3246,6 @@ class IndexReader:
             ).parquet(p)
         return self._artifact("pagerank")
 
-    def _fusion_pr_topk_exhaustive(self, query: str, k: int = 10) -> DataFrame:
-        """Index-backed 3-signal `/search` (J4 full set): the pinned
-        0.5·bm25/max + 0.3·title_hits/|q| + 0.2·pr/max_pr formula of
-        engine/ranking.fusion_pr_topk (its recompute path is the
-        oracle), with PageRank read from the index's parquet artifact.
-        Candidates = body OR title matches; pr is a LEFT-joined prior."""
-        from .ranking import FUSE3_W_BODY, FUSE3_W_PR, FUSE3_W_TITLE, _ranked
-        from .textops import ROUND
-
-        terms = sorted(set(tokenize(query, use_stem=False)))
-        n_q = len(terms)
-        if n_q == 0:
-            return self.spark.createDataFrame(
-                [], "rank int, doc_id long, score double"
-            )
-        body = self._body_scores_once(query)
-        body_max = body.agg(F.max("score").alias("max_bm25"))
-        body_n = body.crossJoin(F.broadcast(body_max)).select(
-            "doc_id", (F.col("score") / F.col("max_bm25")).alias("body_score")
-        )
-        title = (
-            self.title_terms()
-            .where(F.col("term").isin(terms))
-            .groupBy("doc_id")
-            .agg((F.count("*") / F.lit(float(n_q))).alias("title_score"))
-        )
-        pr = self.pagerank_df()
-        # static-prior max from the reader's _prior_top cache (top-1 of
-        # the sorted prior IS the exact max, same float as the agg) —
-        # one TakeOrderedAndProject per reader lifetime instead of a
-        # corpus-sized max() scan per query
-        _, _, max_pr = self._prior_top("pr", pr, "pr")
-        pr_n = pr.select(
-            "doc_id", (F.col("pr") / F.lit(max_pr)).alias("pr_score")
-        )
-        fused = (
-            body_n.join(title, "doc_id", "full_outer")
-            .join(pr_n, "doc_id", "left")
-            .select(
-                "doc_id",
-                F.round(
-                    FUSE3_W_BODY * F.coalesce("body_score", F.lit(0.0))
-                    + FUSE3_W_TITLE * F.coalesce("title_score", F.lit(0.0))
-                    + FUSE3_W_PR * F.coalesce("pr_score", F.lit(0.0)),
-                    ROUND,
-                ).alias("score"),
-            )
-        )
-        return _ranked(fused, "score", k)
-
     def pageviews_df(self) -> DataFrame:
         """(doc_id, views) served from a parquet artifact under the
         index dir — the scale-safe analog of the reference's pickled
@@ -3357,68 +3261,3 @@ class IndexReader:
                 "overwrite"
             ).parquet(p)
         return self._artifact("pageviews")
-
-    def _fusion_pv_topk_exhaustive(self, query: str, k: int = 10) -> DataFrame:
-        """Index-backed 4-signal `/search` (J4 FULL reference set:
-        body + title + PageRank + pageviews), pinned formula of
-        engine/ranking.fusion_pv_topk (the recompute path is the
-        oracle). Both priors read from parquet artifacts; candidates =
-        body OR title matches; priors are LEFT-joined."""
-        from .ranking import (
-            FUSE4_W_BODY,
-            FUSE4_W_PR,
-            FUSE4_W_PV,
-            FUSE4_W_TITLE,
-            _ranked,
-        )
-        from .textops import ROUND
-
-        terms = sorted(set(tokenize(query, use_stem=False)))
-        n_q = len(terms)
-        if n_q == 0:
-            return self.spark.createDataFrame(
-                [], "rank int, doc_id long, score double"
-            )
-        body = self._body_scores_once(query)
-        body_max = body.agg(F.max("score").alias("max_bm25"))
-        body_n = body.crossJoin(F.broadcast(body_max)).select(
-            "doc_id", (F.col("score") / F.col("max_bm25")).alias("body_score")
-        )
-        title = (
-            self.title_terms()
-            .where(F.col("term").isin(terms))
-            .groupBy("doc_id")
-            .agg((F.count("*") / F.lit(float(n_q))).alias("title_score"))
-        )
-        pr = self.pagerank_df()
-        # static-prior maxes from the reader's _prior_top cache (same
-        # floats as the per-query agg, paid once per reader lifetime)
-        _, _, max_pr = self._prior_top("pr", pr, "pr")
-        pr_n = pr.select(
-            "doc_id", (F.col("pr") / F.lit(max_pr)).alias("pr_score")
-        )
-        pv = self.pageviews_df()
-        _, _, max_views = self._prior_top("pv", pv, "views")
-        pv_n = pv.select(
-            "doc_id",
-            (
-                F.log(F.lit(1.0) + F.col("views"))
-                / F.log(F.lit(1.0) + F.lit(max_views))
-            ).alias("pv_score"),
-        )
-        fused = (
-            body_n.join(title, "doc_id", "full_outer")
-            .join(pr_n, "doc_id", "left")
-            .join(pv_n, "doc_id", "left")
-            .select(
-                "doc_id",
-                F.round(
-                    FUSE4_W_BODY * F.coalesce("body_score", F.lit(0.0))
-                    + FUSE4_W_TITLE * F.coalesce("title_score", F.lit(0.0))
-                    + FUSE4_W_PR * F.coalesce("pr_score", F.lit(0.0))
-                    + FUSE4_W_PV * F.coalesce("pv_score", F.lit(0.0)),
-                    ROUND,
-                ).alias("score"),
-            )
-        )
-        return _ranked(fused, "score", k)

@@ -5,10 +5,11 @@ stopping bound) vs the exhaustive shape it replaces
 (bm25_scores_all over every body-matching doc, full_outer joins
 against corpus-sized prior frames).
 
-Variants, all VALUE-identical (checked in-run):
-  T2/E2   fusion_topk      TA vs _fusion_topk_exhaustive
-  T3/E3   fusion_pr_topk   TA vs _fusion_pr_topk_exhaustive
-  T4/E4   fusion_pv_topk   TA vs _fusion_pv_topk_exhaustive
+Variants, all VALUE-identical (checked in-run); E* call the one
+exhaustive path, _fusion_exhaustive(variant, ...):
+  T2/E2   fusion_topk      TA vs _fusion_exhaustive("fusion", ...)
+  T3/E3   fusion_pr_topk   TA vs _fusion_exhaustive("pr", ...)
+  T4/E4   fusion_pv_topk   TA vs _fusion_exhaustive("pv", ...)
 
 Also reports the reader's fusion_ta_served / fusion_ta_fallback
 counters: the TA bound is distribution-dependent (prior tails), so a
@@ -16,6 +17,7 @@ variant that mostly falls back shows no win by design — the counters
 make that visible instead of leaving a mystery delta.
 
 Usage: python scripts/ab_fusion.py [--docs 1200000] [--cores 32]
+                                   [--shards 256] [--reps 5]
 """
 
 from __future__ import annotations
@@ -103,11 +105,11 @@ def main() -> None:
 
         cases = {
             "T2_fusion_ta": lambda: reader.fusion_topk(Q, 10),
-            "E2_fusion_exh": lambda: reader._fusion_topk_exhaustive(Q, 10),
+            "E2_fusion_exh": lambda: reader._fusion_exhaustive("fusion", Q, 10),
             "T3_fusion_pr_ta": lambda: reader.fusion_pr_topk(Q, 10),
-            "E3_fusion_pr_exh": lambda: reader._fusion_pr_topk_exhaustive(Q, 10),
+            "E3_fusion_pr_exh": lambda: reader._fusion_exhaustive("pr", Q, 10),
             "T4_fusion_pv_ta": lambda: reader.fusion_pv_topk(Q, 10),
-            "E4_fusion_pv_exh": lambda: reader._fusion_pv_topk_exhaustive(Q, 10),
+            "E4_fusion_pv_exh": lambda: reader._fusion_exhaustive("pv", Q, 10),
         }
         # N* controls: the exhaustive variants with the body
         # localCheckpoint disabled (plan built under a momentary
@@ -126,11 +128,11 @@ def main() -> None:
             return run
 
         cases["N2_fusion_exh_nockpt"] = _nockpt(
-            lambda: reader._fusion_topk_exhaustive(Q, 10))
+            lambda: reader._fusion_exhaustive("fusion", Q, 10))
         cases["N3_fusion_pr_exh_nockpt"] = _nockpt(
-            lambda: reader._fusion_pr_topk_exhaustive(Q, 10))
+            lambda: reader._fusion_exhaustive("pr", Q, 10))
         cases["N4_fusion_pv_exh_nockpt"] = _nockpt(
-            lambda: reader._fusion_pv_topk_exhaustive(Q, 10))
+            lambda: reader._fusion_exhaustive("pv", Q, 10))
         if args.cases:
             keep = {c.strip() for c in args.cases.split(",")}
             unknown = keep - cases.keys()

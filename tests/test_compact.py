@@ -84,8 +84,9 @@ def test_deleted_docs_vanish_with_stale_scores(lifecycle):
 def test_all_surfaces_filter_tombstones(lifecycle, queries):
     """Every index-backed surface drops tombstoned docs before its
     top-k cut: tfidf, title, phrase, proximity, boolean, the exhaustive
-    union scoring and the msm / boosting surfaces built on it — those
-    also on their TA candidate path (_body_candidate_pdf)."""
+    union scoring, the msm / boosting surfaces built on it and the
+    three fusion variants — those also on their TA candidate path
+    (_body_candidate_pdf, _fusion_serve)."""
     deleted, del_ids = lifecycle["deleted"], lifecycle["del_ids"]
     q = lifecycle["query"]
     ta = IndexReader(deleted.spark, deleted.dir)
@@ -96,6 +97,9 @@ def test_all_surfaces_filter_tombstones(lifecycle, queries):
             r.msm_topk(q, 50, min_should_match=1),
             r.msm_topk(q, 50, min_should_match=2),
             r.boosting_topk(q, "index", 50),
+            r.fusion_topk(q, 200),
+            r.fusion_pr_topk(q, 200),
+            r.fusion_pv_topk(q, 200),
         )
 
     for df in (
@@ -112,6 +116,7 @@ def test_all_surfaces_filter_tombstones(lifecycle, queries):
         ids = {r["doc_id"] for r in df.collect()}
         assert not ids & del_ids
     assert ta.mod_ta_served > 0
+    assert ta.fusion_ta_served > 0
 
 
 def test_compacted_equals_fresh_build(lifecycle):

@@ -13,10 +13,13 @@ from engine.index import IndexReader, build_index
 pytestmark = pytest.mark.slow
 
 VARIANTS = [
-    ("fusion_topk", "_fusion_topk_exhaustive"),
-    ("fusion_pr_topk", "_fusion_pr_topk_exhaustive"),
-    ("fusion_pv_topk", "_fusion_pv_topk_exhaustive"),
+    ("fusion_topk", "fusion"),
+    ("fusion_pr_topk", "pr"),
+    ("fusion_pv_topk", "pv"),
 ]
+# (public method, _fusion_exhaustive variant); the ids keep the names
+# these cases were first published under, one exhaustive method each
+VARIANT_IDS = [f"{serve}-_{serve}_exhaustive" for serve, _ in VARIANTS]
 
 
 @pytest.fixture(scope="module")
@@ -30,7 +33,7 @@ def _rows(df):
     return [(r["rank"], r["doc_id"], r["score"]) for r in df.collect()]
 
 
-@pytest.mark.parametrize("serve,exhaustive", VARIANTS)
+@pytest.mark.parametrize("serve,exhaustive", VARIANTS, ids=VARIANT_IDS)
 def test_ta_matches_exhaustive(spark, ta_index_dir, queries, serve, exhaustive):
     """Default knobs: TA result == exhaustive result, exactly (same
     rounded scores, same ranks, same doc_ids)."""
@@ -38,14 +41,14 @@ def test_ta_matches_exhaustive(spark, ta_index_dir, queries, serve, exhaustive):
     r._FUSION_TA_MIN_DOCS = 0  # force TA on the 200-doc fixture
     for q in queries[:4]:
         got = _rows(getattr(r, serve)(q["text"], 5))
-        want = _rows(getattr(r, exhaustive)(q["text"], 5))
+        want = _rows(r._fusion_exhaustive(exhaustive, q["text"], 5))
         assert got == want, (serve, q["text"])
     # 3 of the first 4 fixture queries have tokens ("the and of" is
     # stopword-only and early-returns without touching the TA path)
     assert r.fusion_ta_served >= 3
 
 
-@pytest.mark.parametrize("serve,exhaustive", VARIANTS)
+@pytest.mark.parametrize("serve,exhaustive", VARIANTS, ids=VARIANT_IDS)
 def test_ta_bound_path_matches(spark, ta_index_dir, queries, serve, exhaustive):
     """Force the kernel to CUT (k_body below the per-shard match count)
     so outside_possible=True and the TA bound is actually evaluated;
@@ -56,7 +59,7 @@ def test_ta_bound_path_matches(spark, ta_index_dir, queries, serve, exhaustive):
     r._FUSION_TA_KBODY_MIN = 1
     for q in queries[:4]:
         got = _rows(getattr(r, serve)(q["text"], 1))
-        want = _rows(getattr(r, exhaustive)(q["text"], 1))
+        want = _rows(r._fusion_exhaustive(exhaustive, q["text"], 1))
         assert got == want, (serve, q["text"])
     assert r.fusion_ta_served + r.fusion_ta_fallback >= 3
 
@@ -71,7 +74,7 @@ def test_ta_fallback_seam(spark, ta_index_dir):
     r._FUSION_TITLE_CAP = 0
     q = "def return search"  # zipfian-hot fixture terms → title matches
     got = _rows(r.fusion_topk(q, 5))
-    want = _rows(r._fusion_topk_exhaustive(q, 5))
+    want = _rows(r._fusion_exhaustive("fusion", q, 5))
     assert got == want
     assert r.fusion_ta_fallback >= 1 and r.fusion_ta_served == 0
 
@@ -90,7 +93,7 @@ def test_ta_adaptive_disable_on_straddler_blowup(spark, ta_index_dir, queries):
     q = queries[0]["text"]
     for _ in range(3):
         got = _rows(r.fusion_pv_topk(q, 1))
-        want = _rows(r._fusion_pv_topk_exhaustive(q, 1))
+        want = _rows(r._fusion_exhaustive("pv", q, 1))
         assert got == want
     assert len(r._fusion_ta_off) >= 1 or r.fusion_ta_served >= 3
 
@@ -106,7 +109,7 @@ def test_ta_consecutive_miss_disable(spark, ta_index_dir, queries):
     q = "def return search"  # zipfian-hot fixture terms → title matches
     for _ in range(r._FUSION_TA_FAIL_LIMIT + 1):
         got = _rows(r.fusion_topk(q, 5))
-        want = _rows(r._fusion_topk_exhaustive(q, 5))
+        want = _rows(r._fusion_exhaustive("fusion", q, 5))
         assert got == want
     assert len(r._fusion_ta_off) == 1
     assert r.fusion_ta_fallback == r._FUSION_TA_FAIL_LIMIT + 1
@@ -124,7 +127,7 @@ def test_ta_title_hotness_dispatch(spark, ta_index_dir, queries):
     q = "def return search"  # hot fixture terms → title df > -1
     for _ in range(2):
         got = _rows(r.fusion_topk(q, 5))
-        want = _rows(r._fusion_topk_exhaustive(q, 5))
+        want = _rows(r._fusion_exhaustive("fusion", q, 5))
         assert got == want
     assert r.fusion_ta_served == 0 and r.fusion_ta_fallback == 2
     assert not r._fusion_ta_stats  # pre-work dispatch, not a miss
@@ -139,5 +142,5 @@ def test_ta_edge_queries(spark, ta_index_dir):
     assert r.fusion_topk("the of and", 5).count() == 0
     assert (
         r.fusion_topk("zzzqqqxxx nonexistenttokenxyz", 5).count()
-        == r._fusion_topk_exhaustive("zzzqqqxxx nonexistenttokenxyz", 5).count()
+        == r._fusion_exhaustive("fusion", "zzzqqqxxx nonexistenttokenxyz", 5).count()
     )

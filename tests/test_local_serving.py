@@ -285,6 +285,32 @@ def test_local_batch_launches_no_spark_job(spark, readers, queries):
     assert list(sc.statusTracker().getJobIdsForGroup("local-batch-zero-jobs")) == []
 
 
+def test_empty_answers_launch_no_spark_job(spark, readers):
+    """An answer with nothing to score is an empty frame built from an
+    Arrow table (IndexReader._empty): all-out-of-vocabulary exhaustive,
+    filtered and collapsed queries and a stopword-only fusion query
+    register zero Spark jobs, their collect() included."""
+    _, tomb = readers
+    fresh = IndexReader(spark, tomb.dir)
+    sc = spark.sparkContext
+    calls = {
+        "bm25_scores_all": lambda: fresh.bm25_scores_all(BATCH_OOV),
+        "filtered_topk": lambda: fresh.filtered_topk(BATCH_OOV, K, repo="r0"),
+        "collapse_topk": lambda: fresh.collapse_topk(BATCH_OOV, K),
+        "fusion_topk": lambda: fresh.fusion_topk("the and of", K),
+    }
+    for name, call in calls.items():
+        group = f"empty-answer-{name}"
+        sc.setJobGroup(group, name)
+        try:
+            rows = call().collect()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        assert rows == [], name
+        assert list(sc.statusTracker().getJobIdsForGroup(group)) == [], name
+
+
 def test_batch_dispatch_bounds_per_query_mass(monkeypatch, readers, queries):
     """The driver runs the kernel once per query, so a batch whose union
     sits at the bound goes to Spark once its per-query mass passes
